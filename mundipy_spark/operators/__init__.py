@@ -1,4 +1,5 @@
-"""DataFrame-level operators: spatial joins, dedup, similarity, text stats.
+"""DataFrame-level operators: spatial joins, geoparse, rasterize and
+dissolve.
 
 Each operator is a function DataFrame(s) -> DataFrame that composes
 built-in Spark ops plus the kernels' Arrow UDFs; none of them collect to

@@ -141,11 +141,11 @@ def parse_gazetteer(
 
     prefilter_cap: above this many places the alternation pattern stops
     paying for itself (regex state blowup) — fall back to explode-only
-    (exercised at 200k places by bench_gazetteer_xl). On a corpus where
-    most pages DO mention a gazetteer term the prefilter is a pure
-    extra regex pass — pass prefilter=False there; on web text with
-    sparse mentions it is a ~4.5x win (measured at 5M pages, 1%
-    mention rate — BENCH r03).
+    (exercised at 200k places, gazetteer_xl in BENCH_r05.json). On a
+    corpus where most pages DO mention a gazetteer term the prefilter
+    is a pure extra regex pass — pass prefilter=False there; on web
+    text with sparse mentions it is a ~4.5x win (measured at 5M pages,
+    1% mention rate — BENCH_r03.json).
 
     max_ngram bounds the gram generation (one token-array pass per
     distinct L): a place with more tokens raises loudly rather than
@@ -206,12 +206,12 @@ def parse_gazetteer(
         arr = F.col("_toks")
 
         def _grams_of(L: int):
-            # L-grams as a progressive zip of SHIFTED slices (the
-            # bpe._pair_counts shape): 2(L-1) slices + (L-1)
-            # elementwise concat passes per doc — measured 6x faster
-            # than transform(sequence)+per-window slice, bit-identical
-            # output. greatest(..,0) guards docs shorter than L
-            # (slice length 0 -> empty array on every branch).
+            # L-grams as a progressive zip of SHIFTED slices: 2(L-1)
+            # slices + (L-1) elementwise concat passes per doc —
+            # measured 6x faster than transform(sequence)+per-window
+            # slice, bit-identical output. greatest(..,0) guards docs
+            # shorter than L (slice length 0 -> empty array on every
+            # branch).
             n = F.size(arr)
             cnt = F.greatest(n - (L - 1), F.lit(0))
             out = F.slice(arr, 1, cnt)

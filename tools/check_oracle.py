@@ -1,26 +1,27 @@
 """Local replica of the driver's correctness gate: run every queries()
-entry and its oracle_sql() twin at sf0.01, compare row count + column
-names + order-insensitive stringified values.
+entry of __spark_entry__.py and its oracle_sql() twin at sf0.01, compare
+row count + column names + order-insensitive stringified values.
 
-Usage: PYTHONPATH=/root/repo python tools/check_oracle.py [sf_dir] [names...]
+The oracles read one table, `documents` (the pages CTE derives from it);
+the polygon rows generate their grids with range().
+
+Usage: python tools/check_oracle.py [sf_dir] [names...]
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from mundipy_spark.session import get_spark  # noqa: E402
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+TABLES = ["documents"]
 
 
 def canon(df) -> tuple[list[str], list[tuple]]:
@@ -87,9 +88,8 @@ def main() -> int:
             failures += 1
             continue
         if name not in oracles:
-            # every registered query ships an oracle twin (81/81 as
-            # of r5); a missing one is a contract regression, not a
-            # weaker mode
+            # every registered query ships an oracle twin; a missing
+            # one is a contract regression, not a weaker mode
             print(f"FAIL  {name}: no oracle_sql() entry")
             failures += 1
             continue
