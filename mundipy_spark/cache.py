@@ -1,17 +1,21 @@
 """Spatial caches with observable hit/miss counters (reference
 mundipy/cache/__init__.py).
 
-The reference's two decorators, per process (on Spark: per Python
-worker), each with the reference's `cache_info` hit/miss counters plus
-maxsize/currsize:
+Two layers, matching how caching actually works on Spark:
 
-1. `spatial_cache_footprint` — the footprint decorator
+1. `spatial_cache_footprint` — the reference's footprint decorator
    (cache/__init__.py:100-147, tests/test_cache.py): the wrapped fn
    returns (result, footprint); later calls whose query geometry is
-   CONTAINED in a cached footprint are served from the cache.
+   CONTAINED in a cached footprint are served from the cache. Per
+   process (on Spark: per Python worker), with the reference's
+   `cache_info` hit/miss counters plus maxsize/currsize.
 
-2. `union_spatial_cache` — the area-containment decorator
-   (cache/__init__.py:15-98) for region-query functions.
+2. `DistCacheCounters` — Spark-accumulator-backed counters that
+   executor-side memos (the simhash token-hash memo, the decoded-
+   polygon memos) report into, so a DRIVER can read aggregate hit/miss
+   numbers after an action — the observability a user tuning a slow
+   100 TB job actually needs (worker-local dicts are invisible from
+   the driver).
 """
 
 from __future__ import annotations
@@ -150,3 +154,22 @@ def union_spatial_cache(fn=None, maxsize: int = 128):
     check_cache_first.cache_info = cache_info
     return check_cache_first
 
+
+class DistCacheCounters:
+    """Hit/miss counters an executor-side memo reports into, readable
+    from the driver after any action. Accumulators are add-only from
+    tasks — exactly the shape a cache counter needs."""
+
+    def __init__(self, sc, name: str = "cache"):
+        self.name = name
+        self.hits = sc.accumulator(0)
+        self.misses = sc.accumulator(0)
+
+    def record(self, hits: int, misses: int) -> None:
+        if hits:
+            self.hits.add(int(hits))
+        if misses:
+            self.misses.add(int(misses))
+
+    def cache_info(self) -> dict:
+        return {"name": self.name, "hits": self.hits.value, "misses": self.misses.value}

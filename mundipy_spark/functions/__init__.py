@@ -5,6 +5,10 @@ table, mundipy/geometry.py:20-162, re-expressed as Spark columns):
 JVM-side expressions where the math is arithmetic (tile cells, bbox,
 haversine — these stay in whole-stage codegen), Arrow pandas UDFs where
 real geometry kernels are needed.
+
+`text` — text-analysis functions for the training-data pipeline
+(language ID, quality scoring, token counts, fingerprints), built on
+Spark built-ins wherever possible.
 """
 
-from mundipy_spark.functions import st  # noqa: F401
+from mundipy_spark.functions import st, text  # noqa: F401

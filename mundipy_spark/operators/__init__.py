@@ -1,5 +1,4 @@
-"""DataFrame-level operators: spatial joins, geoparse, rasterize and
-dissolve.
+"""DataFrame-level operators: spatial joins, dedup, similarity, text stats.
 
 Each operator is a function DataFrame(s) -> DataFrame that composes
 built-in Spark ops plus the kernels' Arrow UDFs; none of them collect to

@@ -1,10 +1,14 @@
 """Structured Streaming facade.
 
-The reference is batch-only (SURVEY §2.9) — this wrapper exists so the
-same tile-join plan runs over a stream of pages (foreachBatch). State
-and exactly-once delivery ride on Spark's checkpoint location; the
-engine's own lineage table (sources.checkpoint) records per-batch
-partition metrics on top.
+The reference is batch-only (SURVEY §2.9) — these wrappers exist so the
+same tile-join plan runs over a stream of pages (foreachBatch) and so
+late-data windowed aggregation over the events table has a first-class
+operator. State and exactly-once delivery ride on Spark's checkpoint
+location; the engine's own lineage table (sources.checkpoint) records
+per-batch partition metrics on top.
 """
 
-from mundipy_spark.streaming.stream_ops import geocode_stream  # noqa: F401
+from mundipy_spark.streaming.stream_ops import (  # noqa: F401
+    geocode_stream,
+    windowed_event_counts,
+)

@@ -1,4 +1,4 @@
-"""Streaming operators: the streamed geocode pipeline."""
+"""Streaming operators: streamed geocode pipeline + watermarked windows."""
 
 from __future__ import annotations
 
@@ -7,6 +7,33 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from mundipy_spark.operators import geoparse, joins
+
+
+def windowed_event_counts(
+    events_stream: DataFrame,
+    window: str = "5 minutes",
+    slide: str | None = None,
+    watermark: str = "10 minutes",
+) -> DataFrame:
+    """Tumbling/sliding window counts + sums per event_type with a
+    watermark for late data — the standard Structured Streaming shape
+    (append-mode capable)."""
+    # parquet NTZ timestamps are not valid event-time columns; normalize
+    # to session-TZ timestamps (session is pinned UTC)
+    events_stream = events_stream.withColumn("ts", F.col("ts").cast("timestamp"))
+    w = F.window(F.col("ts"), window, slide) if slide else F.window(F.col("ts"), window)
+    return (
+        events_stream.withWatermark("ts", watermark)
+        .groupBy(w.alias("win"), F.col("event_type"))
+        .agg(F.count("*").alias("n"), F.sum("value").alias("sum_value"))
+        .select(
+            F.col("win.start").alias("win_start"),
+            F.col("win.end").alias("win_end"),
+            "event_type",
+            "n",
+            "sum_value",
+        )
+    )
 
 
 def geocode_batch_handler(regions: DataFrame, out_path: str, res: int = 8):
@@ -57,6 +84,281 @@ def geocode_stream(
         .option("checkpointLocation", checkpoint_path)
         .foreachBatch(handle)
     )
+    if trigger_once:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+def sessionize_stream(events_stream: DataFrame, gap_s: int = 1800) -> DataFrame:
+    """Stateful gap-based sessionization — the custom stateful operator
+    path (applyInPandasWithState). State per user: the open session.
+    A session EMITS when a later event arrives more than gap_s after it
+    (closed-by-successor); the open tail session stays in state, so the
+    emitted set equals batch `operators.textstats.sessionize` minus each
+    user's final session — asserted in tests."""
+    import pandas as pd
+    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+    out_schema = (
+        "user_id long, session_start timestamp, session_end timestamp, "
+        "n_events long, sum_value double"
+    )
+    state_schema = "start_s double, end_s double, n long, s double"
+
+    def fn(key, pdfs, state: GroupState):
+        rows = pd.concat(list(pdfs), ignore_index=True)
+        rows["_ts"] = rows["ts"].astype("int64") / 1e9  # epoch seconds
+        rows = rows.sort_values(["_ts", "event_id"])
+        if state.exists:
+            start_s, end_s, n, s = state.get
+        else:
+            start_s = end_s = None
+            n, s = 0, 0.0
+        closed = []
+        for _, r in rows.iterrows():
+            # floor to whole seconds: the batch twin compares
+            # unix_timestamp (truncated) values, match it exactly
+            t, v = float(int(r["_ts"])), float(r["value"])
+            if start_s is None:
+                start_s, end_s, n, s = t, t, 1, v
+            elif t - end_s > gap_s:
+                closed.append((start_s, end_s, n, round(s, 2)))
+                start_s, end_s, n, s = t, t, 1, v
+            else:
+                # events can arrive out of order ACROSS micro-batches
+                # (no ordering guard between files): an event earlier
+                # than the open session's span must widen it, never
+                # rewind end_s — a rewound end corrupts every later
+                # gap decision and splits sessions the batch twin
+                # keeps open
+                start_s, end_s = min(start_s, t), max(end_s, t)
+                n, s = n + 1, s + v
+        state.update((start_s, end_s, n, s))
+        if closed:
+            yield pd.DataFrame(
+                {
+                    "user_id": [int(key[0])] * len(closed),
+                    "session_start": [pd.Timestamp(a, unit="s") for a, _, _, _ in closed],
+                    "session_end": [pd.Timestamp(b, unit="s") for _, b, _, _ in closed],
+                    "n_events": [n_ for _, _, n_, _ in closed],
+                    "sum_value": [s_ for _, _, _, s_ in closed],
+                }
+            )
+
+    return (
+        events_stream.groupBy("user_id")
+        .applyInPandasWithState(
+            fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+        )
+    )
+
+
+def dedup_stream(
+    pages_stream: DataFrame,
+    key_cols: list[str] | None = None,
+    ts_col: str = "warc_ts",
+    watermark: str = "1 hour",
+) -> DataFrame:
+    """Streaming exact dedup: keep the first occurrence per key within
+    the watermark horizon (dropDuplicates with event-time state expiry —
+    state stays bounded at 10^12-row streams because expired keys are
+    evicted). Key defaults to the url; recrawls inside the horizon drop."""
+    keys = list(key_cols or ["url"])
+    return pages_stream.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(keys)
+
+
+def canon_dedup_stream(
+    pages_stream: DataFrame,
+    url_col: str = "url",
+    ts_col: str = "warc_ts",
+    watermark: str = "1 hour",
+) -> DataFrame:
+    """Streaming recrawl collapse on the CANONICAL url (the streaming
+    twin of operators/weburl.recrawl_dedup): canonicalization is
+    stateless map-side codegen, so the only state is the
+    dropDuplicatesWithinWatermark store keyed by canon_url — bounded
+    by the watermark horizon exactly like dedup_stream. Messy variants
+    (case, :443, www., tracking params, fragments) of an already-seen
+    url drop inside the horizon."""
+    from mundipy_spark.operators.weburl import canonical_url_expr
+
+    canon = pages_stream.withColumn(
+        "canon_url", canonical_url_expr(F.col(url_col))
+    )
+    return canon.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
+        ["canon_url"]
+    )
+
+
+def ingest_stream(
+    pages_stream: DataFrame,
+    url_col: str = "url",
+    html_col: str = "html",
+    ts_col: str = "warc_ts",
+    watermark: str = "1 hour",
+) -> DataFrame:
+    """Streaming crawl ingestion — the arrival path of a continuously
+    updated corpus: meta-robots opt-outs drop, text is extracted from
+    the html payload (both stateless map-side codegen,
+    operators/html.py), and recrawls collapse on the canonical URL.
+    The ONLY state is the dropDuplicatesWithinWatermark store keyed by
+    canon_url, bounded by the watermark horizon; html dies at the
+    extraction projection and never enters state."""
+    from mundipy_spark.operators import html as html_ops
+
+    kept = html_ops.drop_noindex(pages_stream, html_col=html_col)
+    extracted = html_ops.extract_text(
+        kept, html_col=html_col, out_col="text"
+    ).drop(html_col)
+    return canon_dedup_stream(
+        extracted, url_col=url_col, ts_col=ts_col, watermark=watermark
+    )
+
+
+def snaptable_batch_handler(
+    path: str,
+    stats_cols: list[str] | None,
+    sink_id: str,
+    key_cols: list[str] | None = None,
+    partition_by: list[str] | None = None,
+):
+    """The foreachBatch handler snaptable_sink installs, exposed for
+    direct (replay) testing: commits the batch as one append snapshot
+    tagged (sink_id, sink_epoch), skipping epochs some committed
+    snapshot already carries — replay-idempotent.
+
+    With `key_cols`, batches after the first UPSERT instead of append
+    (snaptable.merge_into): the continuous-recrawl sink, where a
+    re-fetched URL's newest version replaces the stored row. merge is
+    a require_parent rewrite, so a concurrent batch committer can
+    raise ConflictError — streaming queries are the sole writer of
+    their table by contract (same as Iceberg streaming upsert)."""
+    from mundipy_spark.sources import snaptable
+
+    def handle(batch: DataFrame, epoch_id: int) -> None:
+        if batch.isEmpty():
+            return
+        for snap in snaptable.snapshots(path):
+            if (
+                snap.get("sink_id") == sink_id
+                and snap.get("sink_epoch") == epoch_id
+            ):
+                return  # replayed batch: already committed, skip
+        spark = batch.sparkSession
+        tag = {"sink_id": sink_id, "sink_epoch": epoch_id}
+        if snaptable.current_version(path) == 0:
+            # the hidden-partition spec is a create-time property; every
+            # later append/merge inherits it from the table
+            snaptable.create(
+                spark, path, batch, stats_cols=stats_cols or [],
+                extra=tag, partition_by=partition_by,
+            )
+        elif key_cols:
+            snaptable.merge_into(spark, path, batch, key_cols, extra=tag)
+        else:
+            snaptable.append(spark, path, batch, extra=tag)
+
+    return handle
+
+
+def snaptable_sink(
+    stream: DataFrame,
+    path: str,
+    stats_cols: list[str] | None = None,
+    checkpoint_dir: str | None = None,
+    trigger_once: bool = False,
+    key_cols: list[str] | None = None,
+    partition_by: list[str] | None = None,
+) -> StreamingQuery:
+    """Write a stream into a snapshot-manifest table: every micro-batch
+    commits as ONE atomic append snapshot (sources/snaptable.py), so
+    downstream batch consumers read committed snapshots only — never a
+    half-written batch — and incremental consumers (read_incremental)
+    get exactly-once batches by checkpointing the last snapshot they
+    processed. This is the Iceberg streaming-sink shape: foreachBatch
+    + table commit.
+
+    foreachBatch alone is at-least-once: a crash BETWEEN the table
+    commit and Spark's streaming-checkpoint commit replays the batch on
+    restart. Each snapshot therefore records (sink_id, sink_epoch) and
+    the handler skips a batch whose epoch some committed snapshot
+    already carries — the standard foreachBatch idempotence pattern
+    (Iceberg stores the same tag in its snapshot summary). sink_id is
+    the checkpoint dir, which is what makes epoch numbering stable
+    across restarts AND distinct across different queries writing the
+    same table. Without a checkpoint_dir there is no replay across
+    restarts (Spark assigns a throwaway checkpoint), but epoch ids
+    RESTART at 0 per run — a shared constant sink_id would make run 2's
+    first batch look like a replay of run 1's and silently drop it, so
+    each checkpoint-less query gets a fresh uuid sink_id instead."""
+    import uuid
+
+    handle = snaptable_batch_handler(
+        path, stats_cols, checkpoint_dir or f"nockpt-{uuid.uuid4()}",
+        key_cols, partition_by,
+    )
+    writer = stream.writeStream.foreachBatch(handle).outputMode("append")
+    if checkpoint_dir:
+        writer = writer.option("checkpointLocation", checkpoint_dir)
+    if trigger_once:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+def takedown_batch_handler(path: str, sink_id: str):
+    """The foreachBatch handler takedown_sink installs, exposed for
+    direct (replay) testing: each micro-batch of key tuples commits as
+    ONE merge-on-read eq-delete snapshot tagged (sink_id, sink_epoch),
+    skipping epochs some committed snapshot already carries — the same
+    replay-idempotence contract as snaptable_batch_handler. The batch
+    rewrites nothing: delete cost is O(keys), so a takedown stream
+    against a 10^12-doc table commits at the rate requests arrive,
+    independent of how many data files each request touches."""
+    from mundipy_spark.sources import snaptable
+
+    def handle(batch: DataFrame, epoch_id: int) -> None:
+        if batch.isEmpty():
+            return
+        for snap in snaptable.snapshots(path):
+            if (
+                snap.get("sink_id") == sink_id
+                and snap.get("sink_epoch") == epoch_id
+            ):
+                return  # replayed batch: already committed, skip
+        snaptable.delete_keys(
+            batch.sparkSession,
+            path,
+            batch,
+            extra={"sink_id": sink_id, "sink_epoch": epoch_id},
+        )
+
+    return handle
+
+
+def takedown_sink(
+    stream: DataFrame,
+    path: str,
+    checkpoint_dir: str | None = None,
+    trigger_once: bool = False,
+) -> StreamingQuery:
+    """Apply a stream of removal requests to a snapshot table as
+    merge-on-read equality deletes (sources/snaptable.py delete_keys):
+    the continuous-takedown path a crawl corpus needs — URL removal
+    requests and retroactive robots compliance arrive as a stream, and
+    each micro-batch lands as one atomic 'eq-delete' snapshot without
+    rewriting any data file. The stream's columns name the delete key
+    (e.g. just `url`). Exactly-once via the same (sink_id, sink_epoch)
+    snapshot tags as snaptable_sink; compact() later folds the
+    accumulated delete files into data files, and expire() finalizes
+    the takedowns by reclaiming pre-delete snapshots."""
+    import uuid
+
+    handle = takedown_batch_handler(
+        path, checkpoint_dir or f"nockpt-{uuid.uuid4()}"
+    )
+    writer = stream.writeStream.foreachBatch(handle).outputMode("append")
+    if checkpoint_dir:
+        writer = writer.option("checkpointLocation", checkpoint_dir)
     if trigger_once:
         writer = writer.trigger(availableNow=True)
     return writer.start()

@@ -1,10 +1,11 @@
 """Regression tests for adversarial review pass 5 (sources, st UDF
-edge cases, WKB/WKT fidelity, line buffers)."""
+edge cases, WKB/WKT fidelity, line buffers, tokenizer twin parity)."""
 
 import json
 import struct
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -224,6 +225,42 @@ def test_shapefile_attr_named_geometry_does_not_clobber(spark, tmp_path):
     g = wkb.loads(bytes(r.geometry))  # still WKB, not the attr string
     assert g[0] == "Point" and g[1][0] == 1.0
     assert r.geometry_prop == "x"
+
+
+# --- simhash tokenizer matches the twins on unicode whitespace ---------------
+
+
+def test_simhash_unicode_whitespace_matches_duckdb_twin():
+    import duckdb
+
+    from mundipy_spark.functions import text as tx
+
+    docs = pd.DataFrame(
+        {
+            "doc_id": [1, 2, 3],
+            "text": [
+                "café bar baz",  # U+00A0 must NOT split (twin: RE2 \s)
+                "a b\tc d",  # thin space must not split; tab/space do
+                "  edge  \x0b case ",  # \x0b splits on both sides
+            ],
+        }
+    )
+    got = tx._simhash_batch(docs["text"]).tolist()
+
+    con = duckdb.connect()
+    con.register("documents", docs)
+    sql = "WITH " + tx.simhash_sig_sql() + " SELECT doc_id, sig FROM sig ORDER BY doc_id"
+    want = [int(r[1]) for r in con.execute(sql).fetchall()]
+    assert got == want
+
+
+def test_lang_id_uses_ascii_tokenizer():
+    from mundipy_spark.functions import text as tx
+
+    # 'the'+NBSP+'of' is ONE token under Java/RE2 \s (no marker hits);
+    # Python str.split() used to break it into two stopword hits -> 'en'
+    s = pd.Series(["the of"])
+    assert tx.lang_id.func(s).tolist() == ["und"]
 
 
 # --- tiled sidecar metadata unchanged by the observe() rewrite ---------------

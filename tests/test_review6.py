@@ -1,10 +1,108 @@
-"""Regression tests for review pass 6 (glue modules: checkpoint FS
-resolution, isochrones schema, svg stroke, line_project probe)."""
+"""Regression tests for review pass 6 (glue modules: streaming sink,
+stateful sessionize, CC storage, checkpoint FS resolution, frontier
+deferral, isochrones schema, svg stroke, line_project probe)."""
 
 import json
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
+
+
+# --- stream_ops.snaptable_sink without a checkpoint_dir ----------------
+
+
+def test_snaptable_sink_checkpointless_runs_do_not_collide(spark, tmp_path):
+    """Two checkpoint-less sink runs both restart epoch numbering at 0;
+    each run must get a DISTINCT sink_id or run 2's first batch is
+    mistaken for a replay of run 1's and silently dropped."""
+    from mundipy_spark.sources import snaptable
+    from mundipy_spark.streaming import stream_ops
+
+    path = str(tmp_path / "t")
+    for lo, hi in ((0, 50), (50, 120)):
+        src = str(tmp_path / f"src{lo}")
+        spark.range(lo, hi).select(
+            F.col("id").alias("doc_id"),
+            F.concat(F.lit("u-"), F.col("id")).alias("url"),
+        ).coalesce(1).write.parquet(src)
+        stream = spark.readStream.schema("doc_id long, url string").parquet(src)
+        q = stream_ops.snaptable_sink(
+            stream, path, stats_cols=["doc_id"], trigger_once=True
+        )
+        q.awaitTermination(120)
+    got = snaptable.read(spark, path)
+    assert got.count() == 120
+    assert got.agg(F.sum("doc_id")).first()[0] == sum(range(120))
+
+
+# --- stream_ops.sessionize_stream out-of-order across batches ----------
+
+
+def test_sessionize_stream_late_event_does_not_rewind_session(spark, tmp_path):
+    """A late event (earlier than the open session's end, arriving in a
+    later micro-batch) must widen the session, not rewind end_s — a
+    rewound end splits sessions the batch twin keeps open."""
+    from mundipy_spark.streaming.stream_ops import sessionize_stream
+
+    schema = "user_id long, event_id long, ts timestamp, value double"
+
+    def ev(eid, t):
+        return (1, eid, __import__("datetime").datetime.utcfromtimestamp(t), 1.0)
+
+    src = str(tmp_path / "in")
+    # file 1: t=0, t=1000 (open session end=1000)
+    spark.createDataFrame([ev(1, 0), ev(2, 1000)], schema).coalesce(1).write.parquet(src)
+    # file 2: late t=100, then t=2100 (within gap of 1000, NOT of 100),
+    # then t=5000 which closes the session
+    spark.createDataFrame(
+        [ev(3, 100), ev(4, 2100), ev(5, 5000)], schema
+    ).coalesce(1).write.mode("append").parquet(src)
+
+    stream = (
+        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
+    )
+    out = sessionize_stream(stream, gap_s=1800)
+    q = (
+        out.writeStream.outputMode("append")
+        .format("memory")
+        .queryName("sess_late")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    q.processAllAvailable()
+    q.stop()
+    rows = spark.sql(
+        "SELECT unix_timestamp(session_start) AS ss, "
+        "unix_timestamp(session_end) AS se, n_events FROM sess_late"
+    ).collect()
+    # ONE closed session [0, 2100] with 4 events — the buggy rewind
+    # emitted [0, 100] (split) plus [2100, 2100]
+    assert [(r.ss, r.se, r.n_events) for r in rows] == [(0, 2100, 4)]
+
+
+# --- connected_components frees the previous round's checkpoint --------
+
+
+def test_connected_components_bounded_storage(spark):
+    """A long path graph needs several pointer-jump rounds; the storage
+    footprint after the call must be O(1) label tables, not one
+    localCheckpoint per round."""
+    from mundipy_spark.operators import graph
+
+    sc = spark.sparkContext
+    before = sc._jsc.sc().getPersistentRDDs().size()
+    n = 40
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(n)], "a long, b long"
+    )
+    cc = graph.connected_components(pairs)
+    rows = {r.node: r.component for r in cc.collect()}
+    assert rows == {i: 0 for i in range(n + 1)}
+    after = sc._jsc.sc().getPersistentRDDs().size()
+    # only the FINAL labels table (plus at most one transient) may
+    # remain; pre-fix this grew by one cached table per round
+    assert after - before <= 2
 
 
 # --- checkpoint._exists resolves any scheme through Hadoop FS ----------

@@ -1,4 +1,4 @@
-"""Structured Streaming facade: streamed geocode parity."""
+"""Structured Streaming facade: windowed agg + streamed geocode parity."""
 
 import shutil
 import tempfile
@@ -8,9 +8,46 @@ from pyspark.sql import functions as F
 
 from mundipy_spark.operators import geoparse, joins
 from mundipy_spark.sources import pages as pages_src
-from mundipy_spark.streaming import geocode_stream
+from mundipy_spark.streaming import geocode_stream, windowed_event_counts
 
 SF = "/root/testdata/sf0.001"
+
+
+def test_windowed_event_counts(spark):
+    ev = spark.read.parquet(f"{SF}/events.parquet")
+    schema = ev.schema
+    stream = (
+        spark.readStream.schema(schema).parquet(f"{SF}")
+    )
+    # readStream on the whole dir would read all tables; restrict via file
+    tmp = tempfile.mkdtemp(prefix="evt_stream_")
+    try:
+        ev.write.mode("overwrite").parquet(f"{tmp}/in")
+        stream = spark.readStream.schema(schema).parquet(f"{tmp}/in")
+        agg = windowed_event_counts(stream, window="1 hour", watermark="2 hours")
+        q = (
+            agg.writeStream.outputMode("complete")
+            .format("memory")
+            .queryName("evt_out")
+            .start()
+        )
+        q.processAllAvailable()
+        q.stop()
+        got = spark.sql("SELECT sum(n) AS total FROM evt_out").collect()[0].total
+        assert got == ev.count()
+        # window totals equal a batch groupBy on date_trunc
+        batch = (
+            ev.groupBy(F.date_trunc("hour", "ts").alias("h"), "event_type")
+            .agg(F.count("*").alias("n"))
+        )
+        sgot = {
+            (r.win_start, r.event_type): r.n
+            for r in spark.sql("SELECT * FROM evt_out").collect()
+        }
+        for r in batch.collect():
+            assert sgot[(r.h, r.event_type)] == r.n
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def test_geocode_stream_matches_batch(spark):
@@ -34,6 +71,178 @@ def test_geocode_stream_matches_batch(spark):
         g = {(r.url, r.region) for r in got.select("url", "region").collect()}
         b = {(r.url, r.region) for r in batch.select("url", "region").collect()}
         assert g == b
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_sessionize_stream_matches_batch(spark):
+    """Stateful applyInPandasWithState sessions == batch window sessions
+    minus each user's open (final) session."""
+    from mundipy_spark.operators import sessions
+    from mundipy_spark.streaming.stream_ops import sessionize_stream
+
+    ev = spark.read.parquet(f"{SF}/events.parquet")
+    batch = sessions.sessionize(ev, gap_s=1800)
+    # closed sessions = all minus the last session per user
+    from pyspark.sql import Window as W
+
+    w = W.partitionBy("user_id")
+    closed_expect = {
+        (r.user_id, r.ss, r.se, r.n_events, round(r.sum_value, 2))
+        for r in batch.withColumn("_max", F.max("session_no").over(w))
+        .filter(F.col("session_no") < F.col("_max"))
+        .withColumn("ss", F.unix_timestamp("session_start"))
+        .withColumn("se", F.unix_timestamp("session_end"))
+        .collect()
+    }
+
+    tmp = tempfile.mkdtemp(prefix="sess_stream_")
+    try:
+        ev.write.mode("overwrite").parquet(f"{tmp}/in")
+        stream = spark.readStream.schema(ev.schema).parquet(f"{tmp}/in")
+        out = sessionize_stream(stream, gap_s=1800)
+        q = (
+            out.writeStream.outputMode("append")
+            .format("memory")
+            .queryName("sess_out")
+            .option("checkpointLocation", f"{tmp}/ckpt")
+            .start()
+        )
+        q.processAllAvailable()
+        q.stop()
+        got = {
+            (r.user_id, r.ss, r.se, r.n_events, round(r.sum_value, 2))
+            for r in spark.sql(
+                "SELECT user_id, unix_timestamp(session_start) AS ss, "
+                "unix_timestamp(session_end) AS se, n_events, sum_value FROM sess_out"
+            ).collect()
+        }
+        assert got == closed_expect
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_dedup_stream_drops_recrawls(spark):
+    from mundipy_spark.streaming.stream_ops import dedup_stream
+
+    pages = pages_src.synth_pages(spark, SF).drop("html")
+    dup = pages.limit(100)  # recrawl of 100 urls, 1s later
+    dup = dup.withColumn("warc_ts", F.col("warc_ts") + F.expr("INTERVAL 1 SECOND"))
+    both = pages.unionByName(dup)
+    tmp = tempfile.mkdtemp(prefix="dedup_stream_")
+    try:
+        both.write.mode("overwrite").parquet(f"{tmp}/in")
+        stream = spark.readStream.schema(both.schema).parquet(f"{tmp}/in")
+        out = dedup_stream(stream)
+        q = (
+            out.writeStream.outputMode("append")
+            .format("memory")
+            .queryName("dedup_out")
+            .option("checkpointLocation", f"{tmp}/ckpt")
+            .start()
+        )
+        q.processAllAvailable()
+        q.stop()
+        n = spark.sql("SELECT count(*) AS n FROM dedup_out").collect()[0].n
+        n_urls = spark.sql("SELECT count(DISTINCT url) AS n FROM dedup_out").collect()[0].n
+        assert n == pages.count()  # each url exactly once
+        assert n_urls == n
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_canon_dedup_stream_collapses_messy_variants(spark):
+    from mundipy_spark.streaming.stream_ops import canon_dedup_stream
+
+    pages = pages_src.synth_pages(spark, SF).drop("html")
+    messy = pages.limit(100).withColumn(
+        "url",
+        F.concat(
+            F.regexp_replace(
+                F.col("url"),
+                r"^https://example\.org/",
+                "HTTPS://WWW.Example.ORG:443/",
+            ),
+            F.lit("?utm_source=x#frag"),
+        ),
+    ).withColumn("warc_ts", F.col("warc_ts") + F.expr("INTERVAL 2 SECONDS"))
+    both = pages.unionByName(messy)
+    tmp = tempfile.mkdtemp(prefix="canon_dedup_stream_")
+    try:
+        both.write.mode("overwrite").parquet(f"{tmp}/in")
+        stream = spark.readStream.schema(both.schema).parquet(f"{tmp}/in")
+        out = canon_dedup_stream(stream)
+        q = (
+            out.writeStream.outputMode("append")
+            .format("memory")
+            .queryName("canon_dedup_out")
+            .option("checkpointLocation", f"{tmp}/ckpt")
+            .start()
+        )
+        q.processAllAvailable()
+        q.stop()
+        n = spark.sql("SELECT count(*) AS n FROM canon_dedup_out").collect()[0].n
+        nc = spark.sql(
+            "SELECT count(DISTINCT canon_url) AS n FROM canon_dedup_out"
+        ).collect()[0].n
+        assert n == pages.count()  # every messy variant collapsed
+        assert nc == n
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_ingest_stream_extracts_filters_and_collapses(spark):
+    """Streaming ingestion: noindex pages drop, text extracts
+    byte-identically from the html payload, recrawl variants collapse
+    on the canonical url."""
+    from mundipy_spark.streaming.stream_ops import ingest_stream
+
+    base = pages_src.synth_pages(spark, SF).limit(200).select(
+        "doc_id", "url", "warc_ts", "text"
+    )
+    wrapped = base.withColumn(
+        "html",
+        F.encode(
+            F.concat(
+                F.when(
+                    F.col("doc_id") % 10 == 0,
+                    F.lit('<meta name="robots" content="noindex">'),
+                ).otherwise(F.lit("")),
+                F.lit("<h1>t</h1><p>"),
+                F.col("text"),
+                F.lit("</p>"),
+            ),
+            "UTF-8",
+        ),
+    )
+    messy = wrapped.withColumn(
+        "url",
+        F.regexp_replace(
+            F.col("url"), r"^https://example\.org/", "HTTPS://WWW.Example.ORG:443/"
+        ),
+    ).withColumn("warc_ts", F.col("warc_ts") + F.expr("INTERVAL 3 SECONDS"))
+    both = wrapped.unionByName(messy).withColumnRenamed("text", "authored")
+    tmp = tempfile.mkdtemp(prefix="ingest_stream_")
+    try:
+        both.write.mode("overwrite").parquet(f"{tmp}/in")
+        stream = spark.readStream.schema(both.schema).parquet(f"{tmp}/in")
+        out = ingest_stream(stream)
+        q = (
+            out.writeStream.outputMode("append")
+            .format("memory")
+            .queryName("ingest_out")
+            .option("checkpointLocation", f"{tmp}/ckpt")
+            .start()
+        )
+        q.processAllAvailable()
+        q.stop()
+        rows = spark.sql("SELECT * FROM ingest_out").collect()
+        n_docs = {r.doc_id for r in rows}
+        # noindex pages gone, each surviving doc exactly once
+        assert all(d % 10 != 0 for d in n_docs)
+        assert len(rows) == len(n_docs) == 180
+        # per-url invariant holds through the stream
+        assert all(r.text == "t\n" + r.authored for r in rows)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
