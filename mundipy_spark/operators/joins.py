@@ -20,8 +20,17 @@ Plan properties (the 100 TB story):
   equi-join emits each (point, polygon-cover-row) candidate at most once
   — no dedup shuffle is needed before refinement;
 - refinement cost is bounded by candidates, not |points| x |polygons|,
-  and the bbox prefilter runs JVM-side so the Arrow UDF only sees
-  near-hits.
+  and the bbox prefilter runs JVM-side: the Arrow PIP UDF receives
+  geometry only for boundary-cell near-hits (NULL for the rest).
+
+Joins that end in a Python kernel followed by a filter on its result
+(overlap_weighted_join, within_distance_geom_join, raster.rasterize)
+call a nondeterministic copy of the kernel (`single_eval`). Otherwise
+Catalyst pushes the filter below the projection and copies the UDF
+into it, so the kernel runs twice per candidate. Their candidate
+dedup is a `repartition(defaultParallelism, <dedup keys>)`, which AQE
+does not coalesce; the dedup's own small shuffle would be merged into
+one partition, and the kernel would run on one core.
 """
 
 from __future__ import annotations
@@ -35,6 +44,17 @@ from mundipy_spark.functions import st
 from mundipy_spark.kernels import tiling
 
 DEFAULT_RES = 8  # ~0.7 deg cells; override per layer via pick_resolution
+
+
+def single_eval(udf):
+    """A nondeterministic copy of a registered st.* pandas UDF, so a
+    filter on its result stays above the one projection that computes
+    it (Catalyst does not push filters through nondeterministic
+    projections). A fresh instance from the same function keeps the
+    plan name; `udf.asNondeterministic()` would mutate the shared UDF
+    and turn the registered SQL function nondeterministic for every
+    caller."""
+    return F.pandas_udf(udf.func, udf.returnType).asNondeterministic()
 
 
 # ---------------------------------------------------------------------------
@@ -395,11 +415,12 @@ def tile_join_points(
             "nring", "bpar", "segs", "_salt",
         )
     # Arrow refine path: the kernel receives NULL geometry for interior
-    # rows, so the Python stage's decode+PIP work (and its geometry
-    # bytes on the Arrow wire) scale with the polygon PERIMETER cells,
-    # not the probe stream.
+    # rows and bbox misses (the UDF is extracted below the filter and
+    # sees every candidate), so the Python stage's decode+PIP work and
+    # its geometry bytes on the Arrow wire scale with the boundary-cell
+    # near-hits, not the probe stream.
     refine = st.st_point_in_geom(
-        F.col(lon), F.col(lat), F.when(~F.col("cell_full"), F.col(geom_col))
+        F.col(lon), F.col(lat), F.when(~F.col("cell_full") & bbox_ok, F.col(geom_col))
     )
     return cand.filter(
         F.col("cell_full") | (bbox_ok & F.coalesce(refine, F.lit(False)))
@@ -591,7 +612,10 @@ def within_distance_geom_join(
     (same guarantee as the point-point join: any point within R of a
     covered point shares a cell with the expanded cover); probe side is
     one JVM cell assignment; refine is the grouped Arrow distance
-    kernel over candidates only. Output carries dist_m.
+    kernel over candidates only, evaluated once per candidate and
+    spread over defaultParallelism partitions (the module docstring
+    says why: filter pushdown would run it twice, AQE coalescing on one
+    core). Output carries dist_m.
 
     point_id: compact probe key for the multi-cell candidate dedup.
     When omitted, a 64-bit content hash over the probe columns becomes
@@ -622,8 +646,13 @@ def within_distance_geom_join(
         point_id, drop_pid = "_pid", True
         pts = pts.withColumn("_pid", F.xxhash64(*[F.col(c) for c in points.columns]))
     rhs = F.broadcast(idx) if broadcast_index else idx
-    cand = pts.join(rhs, "cell", "inner").dropDuplicates([point_id, "_gid"])
-    d = st.st_point_geom_dist_m(F.col(lon), F.col(lat), F.col(geom_col))
+    npart = points.sparkSession.sparkContext.defaultParallelism
+    cand = (
+        pts.join(rhs, "cell", "inner")
+        .repartition(npart, point_id, "_gid")
+        .dropDuplicates([point_id, "_gid"])
+    )
+    d = single_eval(st.st_point_geom_dist_m)(F.col(lon), F.col(lat), F.col(geom_col))
     out = (
         cand.withColumn("dist_m", d)
         .filter(F.col("dist_m") <= radius_m)
@@ -808,8 +837,14 @@ def overlap_weighted_join(
     planar=True computes both areas in coordinate space — a RATIO needs
     numerator and denominator in one space, and mixing the pairwise
     local-PCS of the intersection with the region's own PCS would skew
-    it; planar=False keeps the old meters-based behavior."""
-    ia_fn = st.st_intersection_area_planar if planar else st.st_intersection_area
+    it; planar=False keeps the old meters-based behavior.
+
+    The intersection-area kernel runs once per candidate pair, spread
+    over defaultParallelism partitions (the module docstring says why:
+    filter pushdown would run it twice, AQE coalescing on one core)."""
+    ia_fn = single_eval(
+        st.st_intersection_area_planar if planar else st.st_intersection_area
+    )
     ra_fn = st.st_area_planar if planar else st.st_area
     zidx = tile_index(
         zones, geom_col=zone_geom, res=res, null_interior_geom=False
@@ -830,8 +865,10 @@ def overlap_weighted_join(
     ).select(
         F.col("cell"), F.col(region_geom).alias("_rgeom"), "_rid", "_w", "_ra"
     )
+    npart = zones.sparkSession.sparkContext.defaultParallelism
     cand = (
         zidx.join(ridx, "cell")
+        .repartition(npart, zone_id, "_rid")
         .dropDuplicates([zone_id, "_rid"])
         .withColumn("_ia", ia_fn(F.col("_zgeom"), F.col("_rgeom")))
         .filter(F.col("_ia") > 0)

@@ -64,7 +64,13 @@ def rasterize(
     min_coverage: float = 0.0,
 ) -> DataFrame:
     """(cell, <keep cols>, coverage) per covering cell: 1.0 on interior
-    cells for free, exact planar area fraction on boundary cells."""
+    cells for free, exact planar area fraction on boundary cells.
+
+    The area kernel (and the cell-rectangle decode feeding it) runs
+    once per cell row: its nondeterministic copy (joins.single_eval)
+    keeps Catalyst from pushing the `coverage > min_coverage` filter
+    below the projection, which would run both UDFs twice. The rows are
+    already spread over tile_index's defaultParallelism partitions."""
     idx = joins.tile_index(polys, geom_col=geom_col, res=res, keep=keep,
                            null_interior_geom=True)
     minx, miny, maxx, maxy = cell_bounds_exprs(F.col("cell"), res)
@@ -72,7 +78,8 @@ def rasterize(
     cell_area = (360.0 / nx) * (180.0 / ny)
     rect = cell_rect_expr(F.col("cell"), res)
     cov = F.when(F.col("cell_full"), F.lit(1.0)).otherwise(
-        st.st_intersection_area_planar(F.col(geom_col), rect) / F.lit(cell_area)
+        joins.single_eval(st.st_intersection_area_planar)(F.col(geom_col), rect)
+        / F.lit(cell_area)
     )
     keep_cols = keep if keep is not None else [
         c for c in polys.columns if c != geom_col

@@ -471,3 +471,138 @@ def test_st_relate_spark_surface(spark):
     want = [predicates.relate(a, b) for a, b in pairs]
     assert got == want
     assert got[0] == "FF2F11212" and got[3] == "101FF0212"
+
+
+# ---------------------------------------------------------------------------
+# plan shape: each refine kernel runs once per candidate, on every core
+# ---------------------------------------------------------------------------
+
+
+def _final_plan(df) -> list[str]:
+    """Lines of the executed (final AQE) plan of a collected DataFrame."""
+    qe = df._jdf.queryExecution().executedPlan()
+    if qe.nodeName() == "AdaptiveSparkPlan":
+        qe = qe.executedPlan()
+    return qe.treeString().splitlines()
+
+
+def _python_nodes(lines: list[str], udf_name: str) -> int:
+    return sum(1 for ln in lines if "ArrowEvalPython" in ln and f"{udf_name}(" in ln)
+
+
+def _dedup_exchanges(lines: list[str], keys: tuple[str, str]) -> list[str]:
+    return [
+        ln for ln in lines
+        if "Exchange hashpartitioning(" in ln and all(f"{k}#" in ln for k in keys)
+    ]
+
+
+def _sq_wkb(x0, y0, s):
+    ring = np.array(
+        [[x0, y0], [x0 + s, y0], [x0 + s, y0 + s], [x0, y0 + s], [x0, y0]], dtype=float
+    )
+    return wkb.dumps(("Polygon", [ring]))
+
+
+def _overlap_inputs(spark):
+    import pandas as pd
+
+    zones = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "zone_id": [1, 2, 3],
+                "geometry": [_sq_wkb(0.5, 0, 1), _sq_wkb(3, 3, 2), _sq_wkb(9, 9, 1)],
+            }
+        )
+    )
+    regions = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "geometry": [
+                    _sq_wkb(0, 0, 1), _sq_wkb(1, 0, 1), _sq_wkb(4, 4, 1), _sq_wkb(20, 20, 1)
+                ],
+                "pop": [100.0, 200.0, 50.0, 999.0],
+            }
+        )
+    )
+    return zones, regions
+
+
+def _within_inputs(spark):
+    # pid 0 inside "a", pid 1 on the edge of "b"; every other pair is
+    # more than 1.5 deg (~167 km) apart
+    pts = spark.createDataFrame(
+        [(0, 0.5, 0.5), (1, 3.0, 0.5), (2, 40.0, 40.0)], "pid long, lon double, lat double"
+    )
+    polys = spark.createDataFrame(
+        [(_sq_wkb(0, 0, 1), "a"), (_sq_wkb(2, 0, 1), "b")], "geometry binary, name string"
+    )
+    return pts, polys
+
+
+def test_overlap_join_evaluates_area_kernel_once(spark):
+    """One ArrowEvalPython for the ∩-area kernel (a `> 0` filter pushed
+    below its projection would copy it), with the `> 0` filter above
+    it, fed by a REPARTITION_BY_NUM dedup exchange that AQE does not
+    coalesce."""
+    out = joins.overlap_weighted_join(*_overlap_inputs(spark), "pop", res=8)
+    got = {r.zone_id: r.weighted_pop for r in out.collect()}
+    assert got == pytest.approx({1: 150.0, 2: 50.0})
+    lines = _final_plan(out)
+    assert _python_nodes(lines, "st_intersection_area_planar") == 1
+    assert any("Filter" in ln and "> 0.0)" in ln for ln in lines)
+    npart = spark.sparkContext.defaultParallelism
+    ex = _dedup_exchanges(lines, ("zone_id", "_rid"))
+    assert len(ex) == 1 and "REPARTITION_BY_NUM" in ex[0] and f", {npart})" in ex[0]
+
+
+def test_within_distance_join_evaluates_distance_kernel_once(spark):
+    pts, polys = _within_inputs(spark)
+    out = joins.within_distance_geom_join(pts, polys, 150_000.0, point_id="pid")
+    assert {(r.pid, r.name, r.dist_m) for r in out.collect()} == {(0, "a", 0.0), (1, "b", 0.0)}
+    lines = _final_plan(out)
+    assert _python_nodes(lines, "st_point_geom_dist_m") == 1
+    npart = spark.sparkContext.defaultParallelism
+    ex = _dedup_exchanges(lines, ("pid", "_gid"))
+    assert len(ex) == 1 and "REPARTITION_BY_NUM" in ex[0] and f", {npart})" in ex[0]
+
+
+def test_rasterize_evaluates_each_udf_once(spark):
+    from mundipy_spark.operators import raster
+    from mundipy_spark.sources import pages as pages_src
+
+    regions = pages_src.synth_regions(spark, step_deg=30.0).select("geometry", "region")
+    cov = raster.rasterize(regions, res=4, keep=["region"])
+    rows = cov.collect()
+    assert rows and all(r.coverage > 0.0 for r in rows)
+    lines = _final_plan(cov)
+    assert _python_nodes(lines, "st_intersection_area_planar") == 1
+    assert _python_nodes(lines, "st_geomfromtext") == 1
+
+
+def test_registered_kernels_stay_deterministic(spark):
+    """The joins evaluate private nondeterministic copies of the area
+    and distance kernels; the shared st.* UDFs, and plans built from
+    them afterwards (DataFrame and SQL), stay deterministic, so
+    Catalyst may still push filters through them."""
+    joins.overlap_weighted_join(*_overlap_inputs(spark), "pop", res=8).collect()
+    pts, polys = _within_inputs(spark)
+    joins.within_distance_geom_join(pts, polys, 150_000.0, point_id="pid").collect()
+    assert st.st_intersection_area_planar.deterministic
+    assert st.st_point_geom_dist_m.deterministic
+    df = spark.createDataFrame(
+        [(_sq_wkb(0, 0, 1), _sq_wkb(0.5, 0, 1), 0.5, 0.5)],
+        "a binary, b binary, lon double, lat double",
+    )
+    fresh = df.select(
+        st.st_intersection_area_planar(F.col("a"), F.col("b")).alias("ia"),
+        st.st_point_geom_dist_m(F.col("lon"), F.col("lat"), F.col("a")).alias("d"),
+    )
+    proj = fresh._jdf.queryExecution().analyzed().expressions()
+    assert proj.size() == 2
+    assert all(proj.apply(i).deterministic() for i in range(proj.size()))
+    st.register_sql(spark)
+    df.createOrReplaceTempView("_det_pairs")
+    sql = spark.sql("SELECT st_intersection_area_planar(a, b) AS ia FROM _det_pairs")
+    assert sql._jdf.queryExecution().analyzed().expressions().apply(0).deterministic()
+    assert sql.collect()[0].ia == pytest.approx(0.5)

@@ -227,3 +227,128 @@ def test_invalid_multipolygon_falls_back_to_arrow(spark):
     vidx = joins.tile_index(vpolys, res=4, keep=["region"], refine="jvm")
     maxk, unsafe = joins._index_probe(vidx)
     assert not unsafe and maxk > 0
+
+
+def _jagged_star(rng, cx, cy, n=256, r0=0.25, r1=1.1):
+    """n-vertex jagged star: simple (one vertex per angular slot) and
+    concave; at the defaults all 256 edges squeeze into a few res-8
+    cells."""
+    ang = 2 * np.pi * (np.arange(n) + rng.uniform(0.05, 0.95, n)) / n
+    rad = rng.uniform(r0, r1, n)
+    ring = np.column_stack([cx + rad * np.cos(ang), cy + rad * np.sin(ang)])
+    return np.vstack([ring, ring[:1]])
+
+
+def _covers_oracle(ring, xs, ys, eps=1e-9):
+    """Even-odd crossing parity plus distance-to-edge <= eps (covers
+    semantics), numpy only."""
+    x0, y0, x1, y1 = ring[:-1, 0], ring[:-1, 1], ring[1:, 0], ring[1:, 1]
+    px, py = xs[:, None], ys[:, None]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        xint = (x1 - x0) * (py - y0) / (y1 - y0) + x0
+        crosses = ((y0 > py) != (y1 > py)) & (px < xint)
+        dx, dy = x1 - x0, y1 - y0
+        t = np.clip(((px - x0) * dx + (py - y0) * dy) / (dx * dx + dy * dy), 0.0, 1.0)
+    d2 = (px - x0 - t * dx) ** 2 + (py - y0 - t * dy) ** 2
+    return (crosses.sum(axis=1) % 2 == 1) | (d2 <= eps * eps).any(axis=1)
+
+
+def test_unrolled_refine_accepts_points_on_slanted_edges(spark):
+    """Edge midpoints and vertices of 12-vertex stars (slanted edges
+    several degrees long) are covered on the unrolled JVM refine path,
+    as on the Arrow path and in the numpy oracle."""
+    rng = np.random.default_rng(3)
+    rings = [
+        _jagged_star(rng, cx, cy, n=12, r0=2.0, r1=9.0)
+        for cx, cy in ((10.3, 20.2), (-40.6, -5.3), (100.1, 40.7))
+    ]
+    polys = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "region": [f"S{i}" for i in range(len(rings))],
+                "geometry": [wkb.dumps(("Polygon", [r])) for r in rings],
+            }
+        )
+    )
+    xs = np.concatenate([(r[1:, 0] + r[:-1, 0]) / 2 for r in rings] + [r[:-1, 0] for r in rings])
+    ys = np.concatenate([(r[1:, 1] + r[:-1, 1]) / 2 for r in rings] + [r[:-1, 1] for r in rings])
+    pts = spark.createDataFrame(
+        pd.DataFrame({"pid": np.arange(len(xs)), "lon": xs, "lat": ys})
+    )
+    want = {
+        (int(p), f"S{i}")
+        for i, r in enumerate(rings)
+        for p in np.nonzero(_covers_oracle(r, xs, ys))[0]
+    }
+    assert len(want) == len(xs)
+    for refine in ("jvm", "arrow"):
+        idx = joins.tile_index(polys, res=6, refine=refine)
+        if refine == "jvm":
+            assert joins._index_maxk(idx) <= joins.UNROLL_CAP
+        got = joins.tile_join_points(pts, polys, res=6, index=idx)
+        assert {(r.pid, r.region) for r in got.collect()} == want, refine
+
+
+def test_dense_layer_tile_join_matches_oracle(spark):
+    """Dense layer (256-vertex stars at res 8, far above UNROLL_CAP
+    segments per boundary cell): the default tile join picks the Arrow
+    index for inner and left joins, a prebuilt refine="jvm" index takes
+    the HOF-aggregate refine, and all three match a numpy covers oracle,
+    including probes on exact vertices and on edges."""
+    rng = np.random.default_rng(23)
+    rings = [
+        _jagged_star(rng, cx, cy) for cx, cy in ((10.3, 20.2), (12.1, 20.9), (-40.6, -5.3))
+    ]
+    polys = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "region": [f"D{i}" for i in range(len(rings))],
+                "geometry": [wkb.dumps(("Polygon", [r])) for r in rings],
+            }
+        )
+    )
+    xs, ys = [], []
+    for r in rings:
+        lo, hi = r.min(axis=0), r.max(axis=0)
+        xs.append(rng.uniform(lo[0] - 0.1, hi[0] + 0.1, 600))
+        ys.append(rng.uniform(lo[1] - 0.1, hi[1] + 0.1, 600))
+        xs.append(r[:-1:4, 0])  # exact vertices
+        ys.append(r[:-1:4, 1])
+        mid = (r[1::4] + r[:-1:4]) / 2.0  # on edges
+        xs.append(mid[:, 0])
+        ys.append(mid[:, 1])
+    xs, ys = np.concatenate(xs), np.concatenate(ys)
+    pts = spark.createDataFrame(
+        pd.DataFrame({"pid": np.arange(len(xs)), "lon": xs, "lat": ys})
+    )
+    want = {
+        (int(p), f"D{i}")
+        for i, r in enumerate(rings)
+        for p in np.nonzero(_covers_oracle(r, xs, ys))[0]
+    }
+    assert len(want) > 500
+
+    ij = joins.tile_index(polys, res=8, refine="jvm").persist()
+    assert joins._index_maxk(ij) > 2 * joins.UNROLL_CAP
+
+    def pairs(df):
+        return {(r.pid, r.region) for r in df.select("pid", "region").collect()}
+
+    inner = joins.tile_join_points(pts, polys, res=8, how="inner")
+    plan = inner._jdf.queryExecution().optimizedPlan().toString()
+    assert "st_point_in_geom" in plan and "segs" not in plan
+    assert pairs(inner) == want
+
+    left = joins.tile_join_points(pts, polys, res=8, how="left")
+    plan = left._jdf.queryExecution().optimizedPlan().toString()
+    assert "st_points_in_geoms" in plan and "segs" not in plan
+    rows = left.select("pid", "region").collect()
+    assert {(r.pid, r.region) for r in rows if r.region is not None} == want
+    matched = {p for p, _ in want}
+    assert sorted(r.pid for r in rows if r.region is None) == sorted(
+        set(range(len(xs))) - matched
+    )
+
+    hof = joins.tile_join_points(pts, polys, res=8, how="inner", index=ij)
+    assert pairs(hof) == want
+    ij.unpersist()

@@ -16,17 +16,18 @@ Checks (all pure numpy, no Spark):
    relate_pattern definitions on random pairs.
 3. WKB round-trips on every generated geometry.
 
-Usage: PYTHONPATH=/root/repo python tools/fuzz_campaign.py [n_overlay] [n_pred] [seed]
+Usage: python tools/fuzz_campaign.py [n_overlay] [n_pred] [seed]
 Exits nonzero on the first divergence with a reproducer dump.
 """
 
 from __future__ import annotations
 
+import os
 import sys
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from mundipy_spark.kernels import measure, overlay, predicates, wkb  # noqa: E402
 
