@@ -516,122 +516,121 @@ def st_cell_refine(g: pd.Series, cell: pd.Series) -> pd.DataFrame:
     )
 
 
-def _seg_dist2_expr(
-    lon: Column, lat: Column, xi: Column, yi: Column, xj: Column, yj: Column
-) -> Column:
-    """Squared distance from (lon, lat) to segment (xi, yi)-(xj, yj),
-    for the 1e-9 on-edge test of the JVM refine expressions. It is
-    point_segs_min_dist's clipped projection in closed form: the nearer
-    endpoint when the projection falls outside the segment, otherwise
-    cross^2 / |seg|^2. The cross product keeps a point ON an edge at
-    d2 ~ 1e-30; the expanded |u|^2 - t*(2*dot - t*|seg|^2) would cancel
-    to ~1e-16 * |u|^2, above the 1e-18 tolerance for midpoints of
-    slanted edges a few tenths of a degree long. Column reuse in Python duplicates the subtree at every
-    reference, and the generated join-condition method must stay small
-    enough to JIT: this form has no clipped-t subtree to repeat."""
-    dx, dy = xj - xi, yj - yi
-    ux, uy = lon - xi, lat - yi
-    dot = ux * dx + uy * dy
-    ln2 = dx * dx + dy * dy
-    cr = ux * dy - uy * dx
-    vx, vy = lon - xj, lat - yj
+def _seg_dist2_sql(lon: str, lat: str, xi: str, yi: str, xj: str, yj: str) -> str:
+    """Squared distance from (lon, lat) to segment (xi, yi)-(xj, yj) as
+    SQL text, for the 1e-9 on-edge test of both JVM refine expressions.
+    It is point_segs_min_dist's clipped projection in closed form: the
+    nearer endpoint when the projection falls outside the segment,
+    otherwise cross^2 / |seg|^2. The cross product keeps a point ON an
+    edge at d2 ~ 1e-30; the expanded |u|^2 - t*(2*dot - t*|seg|^2)
+    would cancel to ~1e-16 * |u|^2, above the 1e-18 tolerance for
+    midpoints of slanted edges a few tenths of a degree long. Operands
+    repeat at every reference, and the generated join-condition method
+    must stay small enough to JIT: this form has no clipped-t subtree
+    to repeat."""
+    dx, dy = f"({xj} - {xi})", f"({yj} - {yi})"
+    ux, uy = f"({lon} - {xi})", f"({lat} - {yi})"
+    dot = f"(({ux} * {dx}) + ({uy} * {dy}))"
+    ln2 = f"(({dx} * {dx}) + ({dy} * {dy}))"
+    cr = f"(({ux} * {dy}) - ({uy} * {dx}))"
+    vx, vy = f"({lon} - {xj})", f"({lat} - {yj})"
     return (
-        F.when(dot <= 0.0, ux * ux + uy * uy)
-        .when(dot >= ln2, vx * vx + vy * vy)
-        .otherwise(cr * cr / ln2)
+        f"CASE WHEN ({dot} <= 0.0D) THEN (({ux} * {ux}) + ({uy} * {uy})) "
+        f"WHEN ({dot} >= {ln2}) THEN (({vx} * {vx}) + ({vy} * {vy})) "
+        f"ELSE (({cr} * {cr}) / {ln2}) END"
     )
 
 
-def pip_refine_expr(
-    lon: Column, lat: Column, segs: Column, nring: Column, bpar: Column,
-    maxk: int,
-) -> Column:
-    """Exact point-in-geometry refinement as a pure Catalyst expression
-    over the per-cell segment subset from `st_cell_refine` — the JVM
-    twin of the `st_point_in_geom` Arrow kernel (identical crossing
-    arithmetic in the same operand order, so the doubles round
+def _cross_sql(
+    live: str, lon: str, lat: str, xi: str, yi: str, xj: str, yj: str
+) -> str:
+    """Does the rightward ray from (lon, lat) cross the segment, for a
+    segment the `live` guard admits? Same formula as
+    predicates.crossings_in_ring: yi==yj edges die on the
+    (yi>lat)!=(yj>lat) term, so the division never matters where it is
+    undefined; past-the-end lookups are null and the conjunction
+    collapses to false."""
+    xint = f"(((({xj} - {xi}) * ({lat} - {yi})) / ({yj} - {yi})) + {xi})"
+    return f"(({live} AND (({yi} > {lat}) != ({yj} > {lat}))) AND ({lon} < {xint}))"
+
+
+def pip_refine_sql(
+    lon: str, lat: str, segs: str, nring: str, bpar: str, maxk: int
+) -> str:
+    """Exact point-in-geometry refinement over the per-cell segment
+    subset from `st_cell_refine`, as SQL text over column references —
+    the JVM twin of the `st_point_in_geom` Arrow kernel (identical
+    crossing arithmetic in the same operand order, so the doubles round
     identically; the same clipped-projection distance, see
-    `_seg_dist2_expr`).
+    `_seg_dist2_sql`). The caller parses it with ONE `F.expr` (the tile
+    join parses its whole condition at once): building the same tree
+    through the Column API took one py4j round trip per operator,
+    thousands per join.
 
     The per-segment loop is UNROLLED to the layer's max segments-per-
     boundary-cell (`maxk`, a tiny driver-side agg over the index):
     higher-order functions like `aggregate` are CodegenFallback, and one
-    in the join's post-filter knocks the whole probe stage out of
-    whole-stage codegen (measured 43s vs 7s at 30M pages). Unrolled
-    terms are flat double arithmetic over `F.get` lookups (null-safe
-    past the array end -> the term collapses to false), so the entire
-    refinement compiles into the same codegen stage as the join;
-    interior-cell candidates short-circuit on cell_full first. Admin
-    layers keep 1-4 segments per boundary cell (rect grid max 3); a
-    coastline-detail layer with hundreds per cell should use
-    refine="arrow" instead, whose per-batch numpy vectorization wins at
-    that density."""
-    par = F.lit(False)
-    edge = F.lit(False)
+    on the probe path knocks the whole probe stage out of whole-stage
+    codegen (measured 43s vs 7s at 30M pages). Unrolled terms are flat
+    double arithmetic over `get` lookups (null-safe past the array end
+    -> the term collapses to false), so the entire refinement compiles
+    into the join's codegen stage; interior-cell candidates short-
+    circuit on cell_full first. Admin layers keep 1-4 segments per
+    boundary cell (rect grid max 3); a coastline-detail layer with
+    hundreds per cell should use refine="arrow" instead, whose
+    per-batch numpy vectorization wins at that density."""
+    par = "false"
+    edge = "false"
     for i in range(maxk):
-        xi, yi = F.get(segs, i * 4), F.get(segs, i * 4 + 1)
-        xj, yj = F.get(segs, i * 4 + 2), F.get(segs, i * 4 + 3)
-        # crossing parity: same formula as predicates.crossings_in_ring
-        # (yi==yj edges die on the (yi>lat)!=(yj>lat) term, so the
-        # division never matters where it is undefined; past-the-end
-        # lookups are null and the conjunction collapses to false)
-        xint = (xj - xi) * (lat - yi) / (yj - yi) + xi
-        cross = (
-            (F.lit(i) < nring)
-            & ((yi > lat) != (yj > lat))
-            & (lon < xint)
-        )
-        d2 = _seg_dist2_expr(lon, lat, xi, yi, xj, yj)
-        par = par != F.coalesce(cross, F.lit(False))
-        edge = edge | F.coalesce(d2 <= F.lit(1e-18), F.lit(False))
-    base = F.coalesce(bpar, F.lit(False))
+        xi, yi = f"get({segs}, {i * 4})", f"get({segs}, {i * 4 + 1})"
+        xj, yj = f"get({segs}, {i * 4 + 2})", f"get({segs}, {i * 4 + 3})"
+        cross = _cross_sql(f"({i} < {nring})", lon, lat, xi, yi, xj, yj)
+        d2 = _seg_dist2_sql(lon, lat, xi, yi, xj, yj)
+        par = f"({par} != coalesce({cross}, false))"
+        edge = f"({edge} OR coalesce(({d2} <= 1.0E-18D), false))"
     # the edge chain only matters when parity says OUTSIDE (it can only
-    # flip outside->inside), so it lives in the CASE's otherwise branch:
+    # flip outside->inside), so it lives in the CASE's ELSE branch:
     # codegen's subexpression elimination evaluates hoisted common
-    # subtrees EAGERLY per row, and the unconditional `par | edge` form
+    # subtrees EAGERLY per row, and the unconditional `par OR edge` form
     # paid the whole distance chain on every candidate (14.2s vs 6.6s at
     # 30M pages); conditional-only expressions are never hoisted
-    return F.when(
-        segs.isNotNull(), F.when(base != par, F.lit(True)).otherwise(edge)
+    return (
+        f"CASE WHEN ({segs} IS NOT NULL) THEN "
+        f"CASE WHEN (coalesce({bpar}, false) != {par}) THEN true ELSE {edge} END END"
     )
 
 
-def pip_refine_agg_expr(
-    lon: Column, lat: Column, segs: Column, nring: Column, bpar: Column
-) -> Column:
-    """Arbitrary-k fallback of pip_refine_expr: the same crossing-parity
-    + on-edge test as an `aggregate` higher-order function. Correct for
-    ANY segments-per-cell count (the unrolled form overflows the
-    driver's Column-tree conversion past ~hundreds of terms), but HOFs
-    are CodegenFallback — use only when a prebuilt refine="jvm" index
-    turns out denser than joins.UNROLL_CAP; dense layers are better
-    served by refine="arrow" (per-batch numpy). Measured on a 4-core
-    host with prebuilt indexes, 50k points against 200 jagged
-    256-vertex polygons at res 8 (178 segments in the densest cell),
-    median of 5 probes: 8.9 s here vs 1.3 s on the Arrow index, ~7x
-    slower."""
-    k = (F.size(segs) / F.lit(4)).cast("int")
+def pip_refine_agg_sql(lon: str, lat: str, segs: str, nring: str, bpar: str) -> str:
+    """Arbitrary-k fallback of pip_refine_sql: the same crossing-parity
+    + on-edge test as an `aggregate` higher-order function, SQL text
+    parsed once by the caller. Correct for ANY segments-per-cell count,
+    but HOFs are CodegenFallback — use only when a prebuilt
+    refine="jvm" index turns out denser than joins.UNROLL_CAP; dense
+    layers are better served by refine="arrow" (per-batch numpy).
+    Measured on a 4-core host with prebuilt indexes, 50k points against
+    200 jagged 256-vertex polygons at res 8 (178 segments in the
+    densest cell), median of 5 probes: 8.9 s here vs 1.3 s on the Arrow
+    index, ~7x slower. Its lambda variables are `_acc` and `_s`, so
+    column operands must not be qualified by those names."""
+    k = f"CAST((size({segs}) / 4) AS INT)"
 
-    def sg(i: Column, j: int) -> Column:
-        return F.element_at(segs, ((i - 1) * 4 + F.lit(j + 1)).cast("int"))
+    def sg(j: int) -> str:
+        return f"element_at({segs}, CAST((((_s - 1) * 4) + {j + 1}) AS INT))"
 
-    def merge(acc: Column, i: Column) -> Column:
-        xi, yi = sg(i, 0), sg(i, 1)
-        xj, yj = sg(i, 2), sg(i, 3)
-        xint = (xj - xi) * (lat - yi) / (yj - yi) + xi
-        cross = (i <= nring) & ((yi > lat) != (yj > lat)) & (lon < xint)
-        d2 = _seg_dist2_expr(lon, lat, xi, yi, xj, yj)
-        return F.struct(
-            (acc["p"] != F.coalesce(cross, F.lit(False))).alias("p"),
-            (acc["e"] | F.coalesce(d2 <= F.lit(1e-18), F.lit(False))).alias("e"),
-        )
-
-    zero = F.struct(F.lit(False).alias("p"), F.lit(False).alias("e"))
-    base = F.coalesce(bpar, F.lit(False))
-    agg = F.aggregate(F.sequence(F.lit(1), k), zero, merge)
-    return F.when(
-        segs.isNotNull() & (k > 0), agg["e"] | (base != agg["p"])
-    ).otherwise(F.when(segs.isNotNull(), base))
+    xi, yi, xj, yj = sg(0), sg(1), sg(2), sg(3)
+    cross = _cross_sql(f"(_s <= {nring})", lon, lat, xi, yi, xj, yj)
+    d2 = _seg_dist2_sql(lon, lat, xi, yi, xj, yj)
+    merge = (
+        f"(_acc, _s) -> struct((_acc.p != coalesce({cross}, false)) AS p, "
+        f"(_acc.e OR coalesce(({d2} <= 1.0E-18D), false)) AS e)"
+    )
+    agg = f"aggregate(sequence(1, {k}), struct(false AS p, false AS e), {merge})"
+    base = f"coalesce({bpar}, false)"
+    return (
+        f"CASE WHEN (({segs} IS NOT NULL) AND ({k} > 0)) "
+        f"THEN ({agg}.e OR ({base} != {agg}.p)) "
+        f"ELSE CASE WHEN ({segs} IS NOT NULL) THEN {base} END END"
+    )
 
 
 @F.pandas_udf(T.LongType())

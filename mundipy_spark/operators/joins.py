@@ -3,12 +3,20 @@
 The reference expresses joins as per-feature probes of an R-tree/GiST
 indexed layer (intersects: mundipy/dataset.py:143-162; within:
 dataset.py:164-177; nearest: dataset.py:179-206). At Spark scale the
-same filter-then-refine shape becomes:
+same filter-then-refine shape becomes one equi-join on the tile cell:
 
     polygons --st_cells--> explode cover --+
-                                           +--> equi-join on cell --> bbox
-    points  --cell_expr (pure JVM)---------+    prefilter (codegen) -->
-                                                exact PIP refine (Arrow UDF)
+                                           +--> equi-join on cell, whose
+    points  --cell_expr (pure JVM)---------+    condition is the refine:
+                                                cell_full OR (bbox AND pip)
+
+On a refine="jvm" index (the default for sparse layers) the pip term is
+a Catalyst expression over the per-cell segment subset, so the refine
+runs inside the join condition, in codegen, and `how='left'` is the
+same join as LEFT OUTER. On an Arrow index (dense or invalid layers)
+the pip term is a Python UDF, which runs after an inner join, or per
+cell array after a left join (Spark rejects a Python UDF in an outer-
+join condition).
 
 Plan properties (the 100 TB story):
 - the point/probe side is never shuffled when the polygon index is
@@ -34,6 +42,8 @@ one partition, and the kernel would run on one core.
 """
 
 from __future__ import annotations
+
+from functools import partial
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
@@ -256,10 +266,17 @@ def add_point_cell(
 
 
 # above this many segments per boundary cell, the unrolled JVM refine
-# expression stops paying for itself (and past ~hundreds of terms the
-# driver's Column-tree conversion overflows): prefer the Arrow index
-# for such layers; a prebuilt dense jvm index falls back to the
-# HOF-aggregate form (correct at any k, CodegenFallback-slow)
+# stops paying for itself. The join condition is generated inline into
+# one method of the probe stage, ~2 KB of SQL per term with nothing
+# shared between terms, so the method outgrows the JIT's huge-method
+# limit and then the JVM's 64 KB limit (janino refuses it and the stage
+# runs interpreted). On a 4-core host with pip_detailed's layer
+# (prebuilt indexes, 50k points; Arrow index 2.0 s): 8 terms 1.0 s,
+# 10 terms 11.0 s (compiled, too large for the JIT), 12-16 terms
+# 4.2-4.8 s (over 64 KB). That puts the break-even near 8 terms, below
+# this cap. Denser layers get the Arrow index; a prebuilt dense jvm
+# index falls back to the HOF-aggregate form (correct at any k,
+# CodegenFallback-slow)
 UNROLL_CAP = 16
 
 # memo keyed by the index DataFrame's logical plan id: the unroll width
@@ -307,6 +324,23 @@ def _index_maxk(index: DataFrame) -> int:
 # ---------------------------------------------------------------------------
 
 
+# index columns that only serve the join itself, never its output
+_INDEX_INTERNAL = (
+    "cell", "_salt", "cell_full", "minx", "miny", "maxx", "maxy",
+    "nring", "bpar", "segs",
+)
+
+
+def _kept_cols(index: DataFrame, geom_col: str) -> list[str]:
+    """The polygon columns a tile join over `index` outputs."""
+    return [c for c in index.columns if c != geom_col and c not in _INDEX_INTERNAL]
+
+
+def _q(side: str, col: str) -> str:
+    """SQL reference to `col` of a join side aliased `side`."""
+    return f"`{side}`.`{col.replace('`', '``')}`"
+
+
 def tile_join_points(
     points: DataFrame,
     polys: DataFrame,
@@ -325,7 +359,17 @@ def tile_join_points(
 
     how='inner' keeps matching pairs; how='left' keeps all points with
     polygon columns null when unmatched (the 'none' default semantics of
-    the reference's tagging loop).
+    the reference's tagging loop). Output: the point columns, then the
+    index's kept polygon columns; a point column that shares a name
+    with a kept polygon column raises ValueError (pick the polygon
+    columns with poly_cols=).
+
+    On a refine="jvm" index (the default for sparse layers) both `how`
+    values are ONE equi-join on the cell whose condition carries the
+    whole refine, `cell_full OR (bbox AND pip)`; the LEFT OUTER form of
+    that join is already the tagging semantics. An Arrow index refines
+    in a Python UDF, which Spark rejects in an outer-join condition, so
+    its left join goes through `_tile_join_points_left`.
 
     salt>0 replicates the index rows salt ways and scatters probes by a
     hash — only meaningful when broadcast_index=False (a broadcast join
@@ -337,6 +381,21 @@ def tile_join_points(
     mundipy/dataset.py:113-115); pass it here to keep repeated joins
     from re-running the cover UDFs.
     """
+    if how not in ("inner", "left"):
+        raise ValueError(f"unsupported how={how!r}")
+    join_keys = ["cell", "_salt"] if salt > 0 and not broadcast_index else ["cell"]
+    if index is not None:
+        kept = _kept_cols(index, geom_col)
+    elif poly_cols is not None:
+        kept = poly_cols
+    else:
+        kept = [c for c in polys.columns if c != geom_col]
+    clash = [c for c in points.columns if c in kept and c not in join_keys]
+    if clash:
+        raise ValueError(
+            f"tile join: point columns {clash} are also polygon columns; "
+            "rename them or choose the polygon columns with poly_cols="
+        )
     if index is None:
         # default to the JVM refine index: exact PIP without Python on
         # the probe path. Two cases rebuild as an Arrow index instead:
@@ -362,69 +421,92 @@ def tile_join_points(
                 polys, geom_col=geom_col, res=res, keep=poly_cols, refine="arrow"
             )
     pts = add_point_cell(points, lon, lat, res)
-
-    join_keys = ["cell"]
-    if salt > 0 and not broadcast_index:
+    if "_salt" in join_keys:
         index = index.withColumn(
             "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
         )
         pts = pts.withColumn(
             "_salt", F.pmod(F.xxhash64(F.col(lon), F.col(lat)), F.lit(salt))
         )
-        join_keys = ["cell", "_salt"]
+    out_cols = [c for c in points.columns if c not in join_keys]
 
+    if "segs" in index.columns:
+        return _tile_join_points_jvm(
+            pts, index, lon, lat, geom_col, join_keys, broadcast_index, how, out_cols
+        )
     if how == "left":
         return _tile_join_points_left(
-            pts, index, lon, lat, geom_col, join_keys, broadcast_index,
-            out_cols=list(points.columns),
+            pts, index, lon, lat, geom_col, join_keys, broadcast_index, out_cols
         )
-    if how != "inner":
-        raise ValueError(f"unsupported how={how!r}")
 
     rhs = F.broadcast(index) if broadcast_index else index
     cand = pts.join(rhs, on=join_keys, how="inner")
     # Interior-cell candidates are PROVEN matches (the whole cell lies
     # inside the polygon) — only boundary-cell rows need the bbox
-    # prefilter + exact PIP.
+    # prefilter + exact PIP. The kernel receives NULL geometry for
+    # interior rows and bbox misses (the UDF is extracted below the
+    # filter and sees every candidate), so the Python stage's decode+PIP
+    # work and its geometry bytes on the Arrow wire scale with the
+    # boundary-cell near-hits, not the probe stream.
     bbox_ok = (
         (F.col(lon) >= F.col("minx"))
         & (F.col(lon) <= F.col("maxx"))
         & (F.col(lat) >= F.col("miny"))
         & (F.col(lat) <= F.col("maxy"))
     )
-    if "segs" in index.columns:
-        # JVM refine path (tile_index(refine="jvm")): exact PIP is a
-        # flat unrolled Catalyst expression over the per-cell segment
-        # subset — no Python anywhere on the probe stream, and
-        # cell_full/bbox short-circuit before the segment terms run.
-        maxk = _index_maxk(index)
-        if maxk <= UNROLL_CAP:
-            ref = st.pip_refine_expr(
-                F.col(lon), F.col(lat),
-                F.col("segs"), F.col("nring"), F.col("bpar"), maxk=maxk,
-            )
-        else:
-            ref = st.pip_refine_agg_expr(
-                F.col(lon), F.col(lat),
-                F.col("segs"), F.col("nring"), F.col("bpar"),
-            )
-        return cand.filter(
-            F.col("cell_full") | (bbox_ok & F.coalesce(ref, F.lit(False)))
-        ).drop(
-            "minx", "miny", "maxx", "maxy", "cell", "cell_full",
-            "nring", "bpar", "segs", "_salt",
-        )
-    # Arrow refine path: the kernel receives NULL geometry for interior
-    # rows and bbox misses (the UDF is extracted below the filter and
-    # sees every candidate), so the Python stage's decode+PIP work and
-    # its geometry bytes on the Arrow wire scale with the boundary-cell
-    # near-hits, not the probe stream.
     refine = st.st_point_in_geom(
         F.col(lon), F.col(lat), F.when(~F.col("cell_full") & bbox_ok, F.col(geom_col))
     )
     return cand.filter(
         F.col("cell_full") | (bbox_ok & F.coalesce(refine, F.lit(False)))
     ).drop("minx", "miny", "maxx", "maxy", "cell", "cell_full", geom_col, "_salt")
+
+
+def _tile_join_points_jvm(
+    pts: DataFrame,
+    index: DataFrame,
+    lon: str,
+    lat: str,
+    geom_col: str,
+    join_keys: list[str],
+    broadcast_index: bool,
+    how: str,
+    out_cols: list[str],
+) -> DataFrame:
+    """Inner or left tile join over a refine="jvm" index as ONE equi-join
+    on the cell keys whose condition is the whole refine:
+
+      cell_full OR (bbox AND coalesce(pip, false))
+
+    Interior-cell rows are accepted from the cell id alone; boundary
+    rows pass the bbox prefilter before the segment terms run. A LEFT
+    OUTER join with this condition emits one row per accepted polygon
+    and one null-tagged row for a point with none (or with a null cell,
+    e.g. an un-geocoded page), and the broadcast hash relation keeps
+    every cover row of a cell, so nothing is regrouped per join. The
+    condition is SQL text parsed once, with every column qualified by
+    its side's alias (the point side `_pt`, the index `_ix`)."""
+    maxk = _index_maxk(index)
+    p, i = partial(_q, "_pt"), partial(_q, "_ix")
+    ops = (p(lon), p(lat), i("segs"), i("nring"), i("bpar"))
+    if maxk <= UNROLL_CAP:
+        ref = st.pip_refine_sql(*ops, maxk=maxk)
+    else:
+        ref = st.pip_refine_agg_sql(*ops)
+    keys = " AND ".join(f"({p(k)} = {i(k)})" for k in join_keys)
+    bbox = (
+        f"((({p(lon)} >= {i('minx')}) AND ({p(lon)} <= {i('maxx')})) "
+        f"AND ({p(lat)} >= {i('miny')})) AND ({p(lat)} <= {i('maxy')})"
+    )
+    cond = F.expr(
+        f"{keys} AND ({i('cell_full')} OR (({bbox}) AND coalesce({ref}, false)))"
+    )
+    rhs = F.broadcast(index) if broadcast_index else index
+    j = pts.alias("_pt").join(rhs.alias("_ix"), cond, how)
+    return j.select(
+        *[F.col(p(c)) for c in out_cols],
+        *[F.col(i(c)) for c in _kept_cols(index, geom_col)],
+    )
 
 
 def _tile_join_points_left(
@@ -437,7 +519,11 @@ def _tile_join_points_left(
     broadcast_index: bool,
     out_cols: list[str],
 ) -> DataFrame:
-    """LEFT point-in-polygon tagging in ONE scan of the probe side.
+    """LEFT point-in-polygon tagging over an Arrow index, in ONE scan of
+    the probe side. (A refine="jvm" index needs none of this: its left
+    join is `_tile_join_points_jvm`'s conditional outer join. Here the
+    refine is a Python UDF, which Spark rejects in an outer-join
+    condition.)
 
     The index is pre-aggregated to one row per cell carrying its
     candidate polygons as an array of structs, so the probe side left-
@@ -451,8 +537,7 @@ def _tile_join_points_left(
       no accepted candidate -> single null-tagged row (left semantics)
 
     Points whose cell key is null (un-geocoded probes) pass through with
-    null polygon columns, which is what lets plans/pipeline.geocode_pages
-    run as a single left tile-join over the parsed pages."""
+    null polygon columns."""
     cand_cols = [c for c in index.columns if c not in join_keys]
     idx_by_cell = index.groupBy(*join_keys).agg(
         F.collect_list(F.struct(*[F.col(c) for c in cand_cols])).alias("_cands")
@@ -477,51 +562,24 @@ def _tile_join_points_left(
     near = F.filter(cands, lambda c: c["cell_full"] | bbox_ok(c))
     full = F.filter(near, lambda c: c["cell_full"])
     bnd = F.filter(near, lambda c: ~c["cell_full"])
-    if "segs" in index.columns:
-        # JVM refine path: per-candidate exact PIP inline in the same
-        # higher-order expression chain — no Arrow round-trip at all
-        maxk = _index_maxk(index)
-
-        def _pip(c):
-            if maxk <= UNROLL_CAP:
-                return st.pip_refine_expr(
-                    F.col(lon), F.col(lat), c["segs"], c["nring"], c["bpar"],
-                    maxk=maxk,
-                )
-            return st.pip_refine_agg_expr(
-                F.col(lon), F.col(lat), c["segs"], c["nring"], c["bpar"]
-            )
-
-        acc_bnd = F.filter(
-            bnd, lambda c: F.coalesce(_pip(c), F.lit(False))
-        )
-    else:
-        mask = st.st_points_in_geoms(
-            F.col(lon), F.col(lat), F.transform(bnd, lambda c: c[geom_col])
-        )
-        acc_bnd = F.transform(
-            F.filter(
-                F.zip_with(bnd, mask, lambda c, m: F.struct(c.alias("c"), m.alias("m"))),
-                lambda z: F.coalesce(z["m"], F.lit(False)),
-            ),
-            lambda z: z["c"],
-        )
+    mask = st.st_points_in_geoms(
+        F.col(lon), F.col(lat), F.transform(bnd, lambda c: c[geom_col])
+    )
+    acc_bnd = F.transform(
+        F.filter(
+            F.zip_with(bnd, mask, lambda c, m: F.struct(c.alias("c"), m.alias("m"))),
+            lambda z: F.coalesce(z["m"], F.lit(False)),
+        ),
+        lambda z: z["c"],
+    )
     accepted = F.concat(full, acc_bnd)
     null_cand = F.lit(None).cast(elem_type)
     padded = F.when(F.size(accepted) > 0, accepted).otherwise(F.array(null_cand))
 
-    keep = [c for c in out_cols if c not in ("_salt",)]
-    meta = [
-        c for c in cand_cols
-        if c not in (
-            geom_col, "minx", "miny", "maxx", "maxy", "cell_full",
-            "nring", "bpar", "segs",
-        )
-    ]
     out = j.withColumn("_c", F.explode(padded))
     return out.select(
-        *[F.col(c) for c in keep if c != "cell"],
-        *[F.col("_c")[c].alias(c) for c in meta],
+        *[F.col(c) for c in out_cols],
+        *[F.col("_c")[c].alias(c) for c in _kept_cols(index, geom_col)],
     )
 
 

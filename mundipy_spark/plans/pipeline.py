@@ -11,12 +11,12 @@ Plan shape (the whole point — read it against .explain):
     |                                        never read
   regexp geoparse + cell arithmetic      <- WholeStageCodegen, no Python
     |
-  broadcast hash join on cell            <- polygon tile index broadcast,
-    |                                        pages NEVER shuffle
-  bbox prefilter (codegen)
-    |
-  exact PIP refine (Arrow UDF)           <- only near-hits reach Python
-    |
+  broadcast hash join on cell,           <- polygon tile index broadcast,
+  LEFT OUTER, condition:                    pages NEVER shuffle
+    cell_full OR (bbox AND exact PIP)    <- JVM refine over the cell's
+    |                                       segments, in codegen; no
+    |                                       Python (dense layers: an
+    |                                       Arrow UDF per cell array)
   write, partitioned by coarse cell      <- partition pruning for readers,
                                             checkpoint key for resume
 

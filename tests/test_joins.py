@@ -606,3 +606,65 @@ def test_registered_kernels_stay_deterministic(spark):
     sql = spark.sql("SELECT st_intersection_area_planar(a, b) AS ia FROM _det_pairs")
     assert sql._jdf.queryExecution().analyzed().expressions().apply(0).deterministic()
     assert sql.collect()[0].ia == pytest.approx(0.5)
+
+
+def test_jvm_tile_join_is_one_conditional_broadcast_join(spark):
+    """On a sparse refine="jvm" layer both join types are a single
+    BroadcastHashJoin whose condition carries the refine; the left join
+    regroups nothing per cell and runs no higher-order function."""
+    from mundipy_spark.sources import pages as pages_src
+
+    layer = pages_src.synth_regions(spark, step_deg=10.0)
+    idx = joins.tile_index(layer, res=6, refine="jvm")
+    assert joins._index_maxk(idx) <= joins.UNROLL_CAP
+    rng = np.random.default_rng(19)
+    rows = [
+        (int(i), float(x), float(y))
+        for i, (x, y) in enumerate(zip(rng.uniform(-179, 179, 400), rng.uniform(-89, 89, 400)))
+    ]
+    # plus one probe with null lon/lat
+    pts = spark.createDataFrame(rows + [(400, None, None)], "pid long, lon double, lat double")
+    for how, kind in (("left", "LeftOuter"), ("inner", "Inner")):
+        out = joins.tile_join_points(pts, layer, res=6, how=how, index=idx)
+        got = {r.pid for r in out.collect()}
+        assert (400 in got) == (how == "left")
+        lines = _final_plan(out)
+        bhj = [ln for ln in lines if "BroadcastHashJoin" in ln]
+        assert len(bhj) == 1, bhj
+        assert f", {kind}, " in bhj[0] and "segs#" in bhj[0] and "cell_full#" in bhj[0]
+        plan = "\n".join(lines)
+        for absent in ("ObjectHashAggregate", "collect_list", "filter(", "transform("):
+            assert absent not in plan, (how, absent)
+
+
+def test_tile_join_rejects_point_columns_shared_with_polygons(spark):
+    """A polygon layer carrying lon/lat label-point columns: the default
+    call names the shared columns and points to poly_cols=; with
+    poly_cols=["name"] both join types match a brute-force oracle."""
+    polys = spark.createDataFrame(
+        [(_sq_wkb(0, 0, 10), "A", 5.0, 5.0), (_sq_wkb(10, 0, 10), "B", 15.0, 5.0)],
+        "geometry binary, name string, lon double, lat double",
+    )
+    rng = np.random.default_rng(29)
+    xs = np.append(rng.uniform(-5, 25, 300), [10.0, 0.0])  # shared edge, corner
+    ys = np.append(rng.uniform(-5, 15, 300), [5.0, 0.0])
+    pts = spark.createDataFrame(
+        [(int(i), float(x), float(y)) for i, (x, y) in enumerate(zip(xs, ys))],
+        "pid long, lon double, lat double",
+    )
+    want = set()
+    for pid, (x, y) in enumerate(zip(xs, ys)):
+        for name, x0 in (("A", 0.0), ("B", 10.0)):
+            if x0 <= x <= x0 + 10 and 0 <= y <= 10:
+                want.add((pid, name))
+    assert (300, "A") in want and (300, "B") in want
+    for how in ("inner", "left"):
+        with pytest.raises(ValueError, match=r"\['lon', 'lat'\].*poly_cols="):
+            joins.tile_join_points(pts, polys, res=6, how=how)
+        out = joins.tile_join_points(pts, polys, res=6, how=how, poly_cols=["name"])
+        assert out.columns == ["pid", "lon", "lat", "name"]
+        rows = out.collect()
+        assert {(r.pid, r.name) for r in rows if r.name is not None} == want
+        untagged = sorted(r.pid for r in rows if r.name is None)
+        expect_untagged = sorted(set(range(len(xs))) - {p for p, _ in want})
+        assert untagged == (expect_untagged if how == "left" else [])

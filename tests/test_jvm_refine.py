@@ -293,8 +293,9 @@ def test_dense_layer_tile_join_matches_oracle(spark):
     """Dense layer (256-vertex stars at res 8, far above UNROLL_CAP
     segments per boundary cell): the default tile join picks the Arrow
     index for inner and left joins, a prebuilt refine="jvm" index takes
-    the HOF-aggregate refine, and all three match a numpy covers oracle,
-    including probes on exact vertices and on edges."""
+    the HOF-aggregate refine for both, and all four match a numpy covers
+    oracle, including probes on exact vertices and on edges; a probe
+    with null lon/lat comes out of a left join once, untagged."""
     rng = np.random.default_rng(23)
     rings = [
         _jagged_star(rng, cx, cy) for cx, cy in ((10.3, 20.2), (12.1, 20.9), (-40.6, -5.3))
@@ -339,16 +340,30 @@ def test_dense_layer_tile_join_matches_oracle(spark):
     assert "st_point_in_geom" in plan and "segs" not in plan
     assert pairs(inner) == want
 
-    left = joins.tile_join_points(pts, polys, res=8, how="left")
+    # left joins also get one probe with null lon/lat: a single
+    # null-tagged row
+    null_pid = len(xs)
+    pts_left = pts.unionByName(
+        spark.createDataFrame([(null_pid, None, None)], "pid long, lon double, lat double")
+    )
+    unmatched = sorted(set(range(len(xs) + 1)) - {p for p, _ in want})
+
+    def check_left(df):
+        rows = df.select("pid", "region").collect()
+        assert {(r.pid, r.region) for r in rows if r.region is not None} == want
+        # each unmatched point exactly once
+        assert sorted(r.pid for r in rows if r.region is None) == unmatched
+
+    left = joins.tile_join_points(pts_left, polys, res=8, how="left")
     plan = left._jdf.queryExecution().optimizedPlan().toString()
     assert "st_points_in_geoms" in plan and "segs" not in plan
-    rows = left.select("pid", "region").collect()
-    assert {(r.pid, r.region) for r in rows if r.region is not None} == want
-    matched = {p for p, _ in want}
-    assert sorted(r.pid for r in rows if r.region is None) == sorted(
-        set(range(len(xs))) - matched
-    )
+    check_left(left)
 
     hof = joins.tile_join_points(pts, polys, res=8, how="inner", index=ij)
     assert pairs(hof) == want
+    # the HOF refine inside a LEFT OUTER join condition
+    hof_left = joins.tile_join_points(pts_left, polys, res=8, how="left", index=ij)
+    plan = hof_left._jdf.queryExecution().optimizedPlan().toString()
+    assert "aggregate(" in plan and "st_points_in_geoms" not in plan
+    check_left(hof_left)
     ij.unpersist()
