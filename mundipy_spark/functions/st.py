@@ -17,6 +17,7 @@ in the DataFrame.
 from __future__ import annotations
 
 import math
+import weakref
 
 import numpy as np
 import pandas as pd
@@ -655,34 +656,53 @@ _POINT_INTERSECTS_CACHE_LIMIT = 4096
 _PIP_DECODE_CACHE: dict[bytes, tuple] = {}
 
 
+def _pip_entry(blob: bytes) -> tuple:
+    """(segs, has_area, flat_ok, geom) of one polygon WKB.
+
+    flat_ok: the flat path XORs crossings across ALL rings of the
+    geometry, which equals points_in_geom's OR-across-polygons only when
+    member interiors are disjoint (any valid (Multi)Polygon). An invalid
+    overlapping-interior multi routes to the generic per-polygon slow
+    path instead (exact check, decode-time only, memoized with the
+    decode)."""
+    geom = wkb.loads(blob)
+    has_area = predicates.has_area(geom)
+    flat_ok = has_area and not tiling.multiparts_interiors_overlap(geom)
+    return predicates.geom_segments(geom), has_area, flat_ok, geom
+
+
 def _decode_for_pip(key: bytes):
     ent = _PIP_DECODE_CACHE.get(key)
     if ent is None:
-        geom = wkb.loads(key)
-        segs = predicates.geom_segments(geom)
-        # flat_ok: the flat path XORs crossings across ALL rings of the
-        # geometry, which equals points_in_geom's OR-across-polygons
-        # only when member interiors are disjoint (any valid
-        # (Multi)Polygon). An invalid overlapping-interior multi routes
-        # to the generic per-polygon slow path instead (exact check,
-        # decode-time only, memoized with the decode).
-        has_area = predicates.has_area(geom)
-        flat_ok = has_area and not tiling.multiparts_interiors_overlap(geom)
-        ent = (segs, has_area, flat_ok, geom)
+        ent = _pip_entry(key)
         if len(_PIP_DECODE_CACHE) >= _POINT_INTERSECTS_CACHE_LIMIT:
             _PIP_DECODE_CACHE.clear()
         _PIP_DECODE_CACHE[key] = ent
     return ent
 
 
+def _pip_groups(xs: np.ndarray, ys: np.ndarray, groups) -> np.ndarray:
+    """Core PIP over rows grouped by polygon: groups yields (decoded
+    entry, row indices). All (point, edge) pairs of the flat-safe groups
+    evaluate in one vectorized pass; the rest take the per-polygon slow
+    path. Returns a bool array aligned with xs."""
+    hit_all = np.zeros(len(xs), dtype=bool)
+    flat_groups = []
+    for (segs, _, flat_ok, geom), ii in groups:
+        if flat_ok and len(segs):
+            flat_groups.append((ii, segs))
+        else:  # degenerate/non-area or overlapping-interior: slow path
+            hit_all[ii] = predicates.points_in_geom(xs[ii], ys[ii], geom)
+    if flat_groups:
+        hit_all |= predicates.points_in_polys_flat(xs, ys, flat_groups)
+    return hit_all
+
+
 def _pip_flat(xs: np.ndarray, ys: np.ndarray, geoms) -> tuple[np.ndarray, np.ndarray]:
-    """Core PIP over parallel (x, y, wkb) triples: distinct polygons
-    decode once (cross-batch memo); all (point, edge) pairs across ALL
-    groups evaluate in one flat vectorized pass. Returns (hit, missing)
-    bool arrays."""
-    n = len(xs)
-    hit_all = np.zeros(n, dtype=bool)
-    missing = np.zeros(n, dtype=bool)
+    """PIP over parallel (x, y, wkb) triples: rows group by their WKB,
+    distinct polygons decode once (cross-batch memo). Returns (hit,
+    missing) bool arrays."""
+    missing = np.zeros(len(xs), dtype=bool)
     groups: dict[bytes, list[int]] = {}
     for i, b in enumerate(geoms):
         # nulls can surface as None OR float NaN depending on the Arrow path
@@ -690,25 +710,18 @@ def _pip_flat(xs: np.ndarray, ys: np.ndarray, geoms) -> tuple[np.ndarray, np.nda
             groups.setdefault(bytes(b), []).append(i)
         else:
             missing[i] = True
-    flat_groups = []
-    for key, idx in groups.items():
-        segs, _, flat_ok, geom = _decode_for_pip(key)
-        ii = np.asarray(idx, dtype=np.int64)
-        if flat_ok and len(segs):
-            flat_groups.append((ii, segs))
-        else:  # degenerate/non-area or overlapping-interior: slow path
-            hit_all[ii] = predicates.points_in_geom(xs[ii], ys[ii], geom)
-    if flat_groups:
-        hit_all |= predicates.points_in_polys_flat(xs, ys, flat_groups)
+    hit_all = _pip_groups(
+        xs,
+        ys,
+        ((_decode_for_pip(k), np.asarray(ii, dtype=np.int64)) for k, ii in groups.items()),
+    )
     return hit_all, missing
 
 
 @F.pandas_udf(T.BooleanType())
 def st_point_in_geom(lon: pd.Series, lat: pd.Series, g: pd.Series) -> pd.Series:
-    """Batch PIP refinement kernel of the tile join (see _pip_flat —
-    per-batch cost has no per-polygon term, which matters because
-    shuffled probe batches touch most of a broadcast admin layer at
-    once)."""
+    """Batch PIP of each point against its row's WKB (see _pip_flat —
+    per-batch cost has no per-polygon term)."""
     xs = lon.to_numpy(np.float64)
     ys = lat.to_numpy(np.float64)
     hit_all, missing = _pip_flat(xs, ys, g)
@@ -745,37 +758,108 @@ def st_point_geom_dist_m(lon: pd.Series, lat: pd.Series, g: pd.Series) -> pd.Ser
     return pd.Series(out)
 
 
-@F.pandas_udf(T.ArrayType(T.BooleanType()))
-def st_points_in_geoms(lon: pd.Series, lat: pd.Series, gs: pd.Series) -> pd.Series:
-    """Array variant for the single-scan LEFT tile join: each row carries
-    its candidate polygons as array<binary>; returns a parallel
-    array<boolean>. Flattens to (point, candidate) pairs and reuses the
-    same flat-vectorized PIP core, so Python cost still scales with
-    boundary candidates, not probe rows."""
-    lens = []
-    fx, fy, fg = [], [], []
-    for x, y, arr in zip(lon, lat, gs):
-        if arr is None or len(arr) == 0:
-            lens.append(0 if arr is not None else -1)
+# ---------------------------------------------------------------------------
+# id-keyed PIP refine of the Arrow tile join: each polygon crosses the
+# Python boundary once per join (in a broadcast table), each candidate
+# row only as (lon, lat, 64-bit id)
+# ---------------------------------------------------------------------------
+
+
+def polygon_table(rows) -> dict[int, bytes]:
+    """{id: WKB} from (id, WKB) pairs, the broadcast side of the id-keyed
+    refine kernels. Rows with the same WKB share an id; null WKB rows are
+    skipped. Two distinct blobs with one id (an xxhash64 collision)
+    raise ValueError: the kernels could not tell them apart."""
+    table: dict[int, bytes] = {}
+    for gid, blob in rows:
+        if blob is None:
             continue
-        lens.append(len(arr))
-        for b in arr:
-            fx.append(x)
-            fy.append(y)
-            fg.append(b)
-    if fx:
-        hit, _ = _pip_flat(np.asarray(fx, np.float64), np.asarray(fy, np.float64), fg)
-    else:
+        blob = bytes(blob)
+        if table.setdefault(int(gid), blob) != blob:
+            raise ValueError(
+                f"polygon table: two distinct geometries share the id {gid} "
+                "(xxhash64 collision)"
+            )
+    return table
+
+
+# decoded polygons of each broadcast polygon table, per worker. Keyed on
+# the Broadcast object, which a Python worker keeps (and reuses across
+# tasks) until no task of its join needs it; the memo goes with it.
+_PIP_TABLE_MEMO: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _pip_by_id(xs: np.ndarray, ys: np.ndarray, ids: np.ndarray, table) -> np.ndarray:
+    """PIP of each point against the polygon its int64 id names in the
+    broadcast polygon table. Rows group by id; each polygon decodes once
+    per worker and table. An id missing from the table raises KeyError."""
+    if ids.dtype != np.int64:
+        raise TypeError(f"polygon ids must arrive as int64, got {ids.dtype}")
+    decoded = _PIP_TABLE_MEMO.get(table)
+    if decoded is None:
+        decoded = _PIP_TABLE_MEMO[table] = {}
+    uniq, inv = np.unique(ids, return_inverse=True)
+    order = np.argsort(inv, kind="stable")
+    bounds = np.concatenate(([0], np.cumsum(np.bincount(inv, minlength=len(uniq)))))
+    groups = []
+    for k, gid in enumerate(uniq.tolist()):
+        ent = decoded.get(gid)
+        if ent is None:
+            blob = table.value.get(gid)
+            if blob is None:
+                raise KeyError(f"polygon id {gid} is not in the join's polygon table")
+            ent = decoded[gid] = _pip_entry(blob)
+        groups.append((ent, order[bounds[k] : bounds[k + 1]]))
+    return _pip_groups(xs, ys, groups)
+
+
+def point_in_geom_by_id(table):
+    """Inner tile-join refine kernel over the broadcast polygon table
+    `table` (a SparkContext.broadcast of polygon_table): (lon, lat, id,
+    near) -> bool. Only rows with `near` set are tested; the rest are
+    False. id and near must be non-null columns (a nullable bigint
+    reaches pandas as float64 and would lose the id's low bits)."""
+
+    def st_point_in_geom_by_id(
+        lon: pd.Series, lat: pd.Series, gid: pd.Series, near: pd.Series
+    ) -> pd.Series:
+        m = near.to_numpy(bool)
+        hit = np.zeros(len(m), dtype=bool)
+        ii = np.flatnonzero(m)
+        if len(ii):
+            hit[ii] = _pip_by_id(
+                lon.to_numpy(np.float64)[ii],
+                lat.to_numpy(np.float64)[ii],
+                gid.to_numpy()[ii],
+                table,
+            )
+        return pd.Series(hit)
+
+    return F.pandas_udf(st_point_in_geom_by_id, T.BooleanType())
+
+
+def points_in_geoms_by_id(table):
+    """Left tile-join refine kernel over the broadcast polygon table
+    `table`: (lon, lat, array<id>) -> parallel array<boolean>. The arrays
+    flatten to (point, id) pairs for one _pip_by_id pass, so Python cost
+    scales with boundary candidates, not probe rows."""
+
+    def st_points_in_geoms_by_id(
+        lon: pd.Series, lat: pd.Series, gids: pd.Series
+    ) -> pd.Series:
+        arrs = gids.to_list()
+        lens = np.fromiter(map(len, arrs), dtype=np.int64, count=len(arrs))
         hit = np.zeros(0, dtype=bool)
-    out = []
-    off = 0
-    for ln in lens:
-        if ln < 0:
-            out.append(None)
-        else:
-            out.append([bool(v) for v in hit[off : off + ln]])
-            off += max(ln, 0)
-    return pd.Series(out)
+        if lens.sum():
+            hit = _pip_by_id(
+                np.repeat(lon.to_numpy(np.float64), lens),
+                np.repeat(lat.to_numpy(np.float64), lens),
+                np.concatenate(arrs),
+                table,
+            )
+        return pd.Series([p.tolist() for p in np.split(hit, np.cumsum(lens))[:-1]])
+
+    return F.pandas_udf(st_points_in_geoms_by_id, T.ArrayType(T.BooleanType()))
 
 
 def _unary_geom(kernel, name: str):

@@ -337,7 +337,14 @@ def is_valid(geom) -> bool:
     sufficient evidence; shared boundary points stay valid, matching
     GEOS's allowance of point touches). The hole check was added after
     tools/fuzz_campaign.py generated hole-pokes-outside-shell polygons
-    that the old check called valid while shapely/GEOS call invalid."""
+    that the old check called valid while shapely/GEOS call invalid.
+
+    Not checked, so reported valid where GEOS reports invalid:
+    - a hole edge that leaves a concave shell while all of the hole's
+      vertices stay inside or on it;
+    - nested shells (a MultiPolygon member inside another);
+    - a hole inside another hole;
+    - overlapping holes."""
     for rings in predicates._polygons_of(geom):
         for ring in rings:
             r = np.asarray(ring, dtype=np.float64)

@@ -16,7 +16,9 @@ runs inside the join condition, in codegen, and `how='left'` is the
 same join as LEFT OUTER. On an Arrow index (dense or invalid layers)
 the pip term is a Python UDF, which runs after an inner join, or per
 cell array after a left join (Spark rejects a Python UDF in an outer-
-join condition).
+join condition). The Arrow join broadcasts each distinct polygon WKB
+once, in a SparkContext.broadcast table keyed by xxhash64(WKB); the
+index rows and the UDF's candidate rows carry only that 64-bit id.
 
 Plan properties (the 100 TB story):
 - the point/probe side is never shuffled when the polygon index is
@@ -29,7 +31,8 @@ Plan properties (the 100 TB story):
   — no dedup shuffle is needed before refinement;
 - refinement cost is bounded by candidates, not |points| x |polygons|,
   and the bbox prefilter runs JVM-side: the Arrow PIP UDF receives
-  geometry only for boundary-cell near-hits (NULL for the rest).
+  (lon, lat, polygon id) per candidate and tests only the boundary-cell
+  near-hits; each worker decodes a polygon once per join.
 
 Joins that end in a Python kernel followed by a filter on its result
 (overlap_weighted_join, within_distance_geom_join, raster.rasterize)
@@ -53,7 +56,7 @@ from pyspark.sql import types as T
 from mundipy_spark.functions import st
 from mundipy_spark.kernels import tiling
 
-DEFAULT_RES = 8  # ~0.7 deg cells; override per layer via pick_resolution
+DEFAULT_RES = 8  # ~0.7 deg cells; every join runs at it unless passed res=
 
 
 def single_eval(udf):
@@ -203,6 +206,11 @@ def tile_index(
     polygon are interior). Pass False when downstream needs the
     geometry on every row (e.g. overlap-area computation).
 
+    The Arrow tile join swaps the geometry column for its xxhash64 id
+    just before the broadcast (tile_join_points), so the WKB kept here
+    reaches the probe only through the join's polygon table; the
+    overlap and within-distance joins read the geometry column itself.
+
     refine="jvm" additionally precomputes, per BOUNDARY cell, the local
     segment subset + parity bit (`st.st_cell_refine`) and DROPS the WKB
     column entirely: tile_join_points then refines with a pure Catalyst
@@ -279,10 +287,27 @@ def add_point_cell(
 # CodegenFallback-slow)
 UNROLL_CAP = 16
 
-# memo keyed by the index DataFrame's logical plan id: the unroll width
-# is a property of the (usually persisted, reused across queries) index,
-# so the tiny driver-side agg runs once per layer, not once per join
-_MAXK_CACHE: dict[int, tuple[int, bool]] = {}
+# memo keyed by the index DataFrame's logical plan and input files: the
+# unroll width is a property of the (usually persisted, reused across
+# queries) index, so the tiny driver-side agg runs once per layer, not
+# once per join. The plan hash alone does not change when a file layer
+# is rewritten at the same path; its part-file names do.
+_MAXK_CACHE: dict[tuple[int, tuple[str, ...]], tuple[int, bool]] = {}
+
+
+def _input_files(df: DataFrame) -> tuple[str, ...]:
+    """Sorted files under the analyzed plan of `df`. (DataFrame.inputFiles
+    reads the cache-substituted plan, which lists no files once an equal
+    plan is cached — as the persisted index of an earlier join is.)"""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    files: set[str] = set()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() == "LogicalRelation":
+            rel = leaf.relation()
+            if rel.getClass().getSimpleName() == "HadoopFsRelation":
+                files.update(rel.location().inputFiles())
+    return tuple(sorted(files))
 
 
 def _index_probe(index: DataFrame) -> tuple[int, bool]:
@@ -293,7 +318,7 @@ def _index_probe(index: DataFrame) -> tuple[int, bool]:
     expression would return wrong containment; callers must use the
     Arrow path). ONE small driver-side agg over the (broadcast-sized)
     index, memoized per plan; amortized exactly like the build itself."""
-    key = index._jdf.queryExecution().logical().semanticHash()
+    key = (index._jdf.queryExecution().logical().semanticHash(), _input_files(index))
     hit = _MAXK_CACHE.get(key)
     if hit is None:
         row = index.agg(
@@ -327,7 +352,7 @@ def _index_maxk(index: DataFrame) -> int:
 # index columns that only serve the join itself, never its output
 _INDEX_INTERNAL = (
     "cell", "_salt", "cell_full", "minx", "miny", "maxx", "maxy",
-    "nring", "bpar", "segs",
+    "nring", "bpar", "segs", "_gid",
 )
 
 
@@ -369,7 +394,14 @@ def tile_join_points(
     whole refine, `cell_full OR (bbox AND pip)`; the LEFT OUTER form of
     that join is already the tagging semantics. An Arrow index refines
     in a Python UDF, which Spark rejects in an outer-join condition, so
-    its left join goes through `_tile_join_points_left`.
+    its left join goes through `_tile_join_points_left`. On the Arrow
+    path the join first collects the layer's (xxhash64 id, WKB) pairs
+    in one small job — from `polys` when it builds the index, from the
+    boundary rows of a prebuilt `index` — deduplicates them on the
+    driver into one SparkContext.broadcast table (st.polygon_table),
+    and broadcasts the index with the id in place of the geometry: the
+    refine UDF receives (lon, lat, id) per candidate and each worker
+    decodes a polygon once per join.
 
     salt>0 replicates the index rows salt ways and scatters probes by a
     hash — only meaningful when broadcast_index=False (a broadcast join
@@ -383,6 +415,7 @@ def tile_join_points(
     """
     if how not in ("inner", "left"):
         raise ValueError(f"unsupported how={how!r}")
+    prebuilt = index is not None
     join_keys = ["cell", "_salt"] if salt > 0 and not broadcast_index else ["cell"]
     if index is not None:
         kept = _kept_cols(index, geom_col)
@@ -421,6 +454,12 @@ def tile_join_points(
                 polys, geom_col=geom_col, res=res, keep=poly_cols, refine="arrow"
             )
     pts = add_point_cell(points, lon, lat, res)
+    if "segs" not in index.columns:
+        g = F.col(geom_col)
+        layer = index.where(~F.col("cell_full")) if prebuilt else polys
+        pairs = layer.select(F.xxhash64(g), g).collect()
+        table = points.sparkSession.sparkContext.broadcast(st.polygon_table(pairs))
+        index = index.withColumn("_gid", F.xxhash64(g)).drop(geom_col)
     if "_salt" in join_keys:
         index = index.withColumn(
             "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
@@ -436,30 +475,28 @@ def tile_join_points(
         )
     if how == "left":
         return _tile_join_points_left(
-            pts, index, lon, lat, geom_col, join_keys, broadcast_index, out_cols
+            pts, index, table, lon, lat, geom_col, join_keys, broadcast_index, out_cols
         )
 
     rhs = F.broadcast(index) if broadcast_index else index
     cand = pts.join(rhs, on=join_keys, how="inner")
     # Interior-cell candidates are PROVEN matches (the whole cell lies
     # inside the polygon) — only boundary-cell rows need the bbox
-    # prefilter + exact PIP. The kernel receives NULL geometry for
-    # interior rows and bbox misses (the UDF is extracted below the
-    # filter and sees every candidate), so the Python stage's decode+PIP
-    # work and its geometry bytes on the Arrow wire scale with the
-    # boundary-cell near-hits, not the probe stream.
+    # prefilter + exact PIP. The UDF is extracted below the filter and
+    # sees every candidate, as (lon, lat, id, near); it decodes and
+    # tests only the `near` rows (boundary-cell bbox hits). Both id and
+    # near are non-null columns, so the id reaches pandas as int64.
     bbox_ok = (
         (F.col(lon) >= F.col("minx"))
         & (F.col(lon) <= F.col("maxx"))
         & (F.col(lat) >= F.col("miny"))
         & (F.col(lat) <= F.col("maxy"))
     )
-    refine = st.st_point_in_geom(
-        F.col(lon), F.col(lat), F.when(~F.col("cell_full") & bbox_ok, F.col(geom_col))
+    near = F.coalesce(~F.col("cell_full") & bbox_ok, F.lit(False))
+    refine = st.point_in_geom_by_id(table)(F.col(lon), F.col(lat), F.col("_gid"), near)
+    return cand.filter(F.col("cell_full") | refine).drop(
+        "minx", "miny", "maxx", "maxy", "cell", "cell_full", "_gid", "_salt"
     )
-    return cand.filter(
-        F.col("cell_full") | (bbox_ok & F.coalesce(refine, F.lit(False)))
-    ).drop("minx", "miny", "maxx", "maxy", "cell", "cell_full", geom_col, "_salt")
 
 
 def _tile_join_points_jvm(
@@ -512,6 +549,7 @@ def _tile_join_points_jvm(
 def _tile_join_points_left(
     pts: DataFrame,
     index: DataFrame,
+    table,
     lon: str,
     lat: str,
     geom_col: str,
@@ -535,6 +573,10 @@ def _tile_join_points_left(
       candidates --[JVM: cell_full | bbox]--> near
       near_full  auto-accept; near_boundary -> array PIP (Arrow UDF)
       no accepted candidate -> single null-tagged row (left semantics)
+
+    The candidates carry the polygon id `_gid` in place of the geometry;
+    the Arrow UDF receives each row's array of boundary ids and looks
+    the polygons up in the broadcast polygon `table`.
 
     Points whose cell key is null (un-geocoded probes) pass through with
     null polygon columns."""
@@ -562,8 +604,8 @@ def _tile_join_points_left(
     near = F.filter(cands, lambda c: c["cell_full"] | bbox_ok(c))
     full = F.filter(near, lambda c: c["cell_full"])
     bnd = F.filter(near, lambda c: ~c["cell_full"])
-    mask = st.st_points_in_geoms(
-        F.col(lon), F.col(lat), F.transform(bnd, lambda c: c[geom_col])
+    mask = st.points_in_geoms_by_id(table)(
+        F.col(lon), F.col(lat), F.transform(bnd, lambda c: c["_gid"])
     )
     acc_bnd = F.transform(
         F.filter(

@@ -16,7 +16,9 @@ Plan shape (the whole point — read it against .explain):
     cell_full OR (bbox AND exact PIP)    <- JVM refine over the cell's
     |                                       segments, in codegen; no
     |                                       Python (dense layers: an
-    |                                       Arrow UDF per cell array)
+    |                                       Arrow UDF over each page's
+    |                                       array of polygon ids, the
+    |                                       polygons broadcast once)
   write, partitioned by coarse cell      <- partition pruning for readers,
                                             checkpoint key for resume
 

@@ -668,3 +668,149 @@ def test_tile_join_rejects_point_columns_shared_with_polygons(spark):
         untagged = sorted(r.pid for r in rows if r.name is None)
         expect_untagged = sorted(set(range(len(xs))) - {p for p, _ in want})
         assert untagged == (expect_untagged if how == "left" else [])
+
+
+# ---------------------------------------------------------------------------
+# Arrow refine by polygon id: no WKB in the broadcast or on the Arrow wire
+# ---------------------------------------------------------------------------
+
+
+def _plan_nodes(df) -> list:
+    """JVM nodes of the executed (final AQE) plan, query stages opened."""
+    stack, out = [df._jdf.queryExecution().executedPlan()], []
+    while stack:
+        n = stack.pop()
+        kind = n.getClass().getSimpleName()
+        if kind == "AdaptiveSparkPlanExec":
+            stack.append(n.executedPlan())
+            continue
+        if kind.endswith("QueryStageExec"):
+            stack.append(n.plan())
+            continue
+        out.append(n)
+        ch = n.children()
+        stack.extend(ch.apply(i) for i in range(ch.size()))
+    return out
+
+
+def _types(exprs) -> list[str]:
+    return [exprs.apply(i).dataType().simpleString() for i in range(exprs.size())]
+
+
+def _dense_layer(spark, names=("D0", "D1", "D2"), centers=None):
+    import pandas as pd
+
+    from tests.test_jvm_refine import _jagged_star
+
+    rng = np.random.default_rng(31)
+    centers = centers or [(10.3, 20.2), (12.1, 20.9), (-40.6, -5.3)][: len(names)]
+    star = {c: _jagged_star(rng, *c) for c in dict.fromkeys(centers)}
+    rings = [star[c] for c in centers]
+    polys = spark.createDataFrame(
+        pd.DataFrame(
+            {"region": list(names), "geometry": [wkb.dumps(("Polygon", [r])) for r in rings]}
+        )
+    )
+    xs, ys = [], []
+    for r in rings:
+        lo, hi = r.min(axis=0), r.max(axis=0)
+        xs.append(rng.uniform(lo[0] - 0.1, hi[0] + 0.1, 400))
+        ys.append(rng.uniform(lo[1] - 0.1, hi[1] + 0.1, 400))
+        xs.append(r[:-1:8, 0])  # exact vertices
+        ys.append(r[:-1:8, 1])
+    xs, ys = np.concatenate(xs), np.concatenate(ys)
+    pts = spark.createDataFrame(
+        pd.DataFrame({"pid": np.arange(len(xs)), "lon": xs, "lat": ys})
+    )
+    return polys, pts, rings, xs, ys
+
+
+def _dense_want(rings, names, xs, ys):
+    from tests.test_jvm_refine import _covers_oracle
+
+    return {
+        (int(p), name)
+        for r, name in zip(rings, names)
+        for p in np.nonzero(_covers_oracle(r, xs, ys))[0]
+    }
+
+
+def _check_tagging(out, how, want, n_points):
+    rows = out.select("pid", "region").collect()
+    assert {(r.pid, r.region) for r in rows if r.region is not None} == want, how
+    untagged = sorted(r.pid for r in rows if r.region is None)
+    expect = sorted(set(range(n_points)) - {p for p, _ in want}) if how == "left" else []
+    assert untagged == expect, how
+
+
+def test_arrow_tile_join_ships_polygon_ids_not_wkb(spark):
+    """On a dense layer (Arrow refine) neither the broadcast index nor
+    the refine UDF's input carries a binary column, for inner and left
+    joins: each polygon reaches Python once, in the join's broadcast
+    polygon table, and the candidates carry its 64-bit id."""
+    names = ("D0", "D1", "D2")
+    polys, pts, rings, xs, ys = _dense_layer(spark, names)
+    want = _dense_want(rings, names, xs, ys)
+    for how, udf in (("inner", "st_point_in_geom"), ("left", "st_points_in_geoms")):
+        out = joins.tile_join_points(pts, polys, res=8, how=how)
+        _check_tagging(out, how, want, len(xs))
+        nodes = _plan_nodes(out)
+        bx = [n for n in nodes if n.nodeName() == "BroadcastExchange"]
+        # the index build's own cover UDFs read the WKB; the refine's
+        # ArrowEvalPython is the one over the join's candidates
+        py = [
+            n.udfs().apply(0) for n in nodes
+            if n.nodeName() == "ArrowEvalPython" and udf in n.udfs().apply(0).name()
+        ]
+        assert bx and len(py) == 1, how
+        for n in bx:
+            assert not any("binary" in t for t in _types(n.output())), how
+        assert not any("binary" in t for t in _types(py[0].children())), how
+
+
+def test_arrow_tile_join_tags_every_row_sharing_a_wkb(spark):
+    """Two layer rows with the same WKB and different names share one
+    polygon id; both names are tagged, on the built and on a prebuilt
+    Arrow index, for inner and left joins."""
+    names = ("A", "B")
+    polys, pts, rings, xs, ys = _dense_layer(spark, names, [(10.3, 20.2)] * 2)
+    assert polys.select("geometry").distinct().count() == 1
+    want = _dense_want(rings, names, xs, ys)
+    assert {n for _, n in want} == {"A", "B"}
+    idx = joins.tile_index(polys, res=8)
+    for how in ("inner", "left"):
+        for index in (None, idx):
+            out = joins.tile_join_points(pts, polys, res=8, how=how, index=index)
+            _check_tagging(out, how, want, len(xs))
+
+
+def test_arrow_tile_join_skips_null_geometry_rows(spark):
+    """A layer row with a null geometry matches no point, on the built
+    and on a prebuilt Arrow index, for inner and left joins."""
+    names = ("D0", "D1")
+    polys, pts, rings, xs, ys = _dense_layer(spark, names)
+    polys = polys.unionByName(spark.createDataFrame([("N", None)], "region string, geometry binary"))
+    want = _dense_want(rings, names, xs, ys)
+    idx = joins.tile_index(polys, res=8)
+    for how in ("inner", "left"):
+        for index in (None, idx):
+            out = joins.tile_join_points(pts, polys, res=8, how=how, index=index)
+            _check_tagging(out, how, want, len(xs))
+
+
+def test_polygon_table_rejects_id_collisions(spark):
+    """The table builder keeps one blob per id, skips null blobs, and
+    raises on two distinct blobs given one id; an id missing from the
+    table raises in the kernel instead of reading as outside."""
+    a, b = _sq_wkb(0, 0, 1), _sq_wkb(5, 5, 1)
+    assert st.polygon_table([(7, a), (7, a), (8, b), (9, None)]) == {7: a, 8: b}
+    with pytest.raises(ValueError, match="share the id 7"):
+        st.polygon_table([(7, a), (7, b)])
+    table = spark.sparkContext.broadcast({7: a})
+    xs, ys = np.array([0.5, 3.0]), np.array([0.5, 3.0])
+    got = st._pip_by_id(xs, ys, np.array([7, 7], dtype=np.int64), table)
+    assert got.tolist() == [True, False]
+    with pytest.raises(KeyError, match="polygon id 8"):
+        st._pip_by_id(xs, ys, np.array([7, 8], dtype=np.int64), table)
+    with pytest.raises(TypeError, match="int64"):
+        st._pip_by_id(xs, ys, np.array([7.0, 7.0]), table)

@@ -367,3 +367,41 @@ def test_dense_layer_tile_join_matches_oracle(spark):
     assert "aggregate(" in plan and "st_points_in_geoms" not in plan
     check_left(hof_left)
     ij.unpersist()
+
+
+def test_rewritten_parquet_layer_is_not_joined_with_a_stale_probe(spark, tmp_path):
+    """A parquet layer rewritten at the same path keeps its plan hash
+    but gets new part files; the tile join's unroll-width memo must not
+    reuse the old layer's width (a narrower refine than the new layer
+    needs drops segments and returns wrong rows). 50 eight-vertex stars,
+    then 24-vertex stars at the same path, each against 20k points and
+    a numpy oracle."""
+    path = str(tmp_path / "layer.parquet")
+    rng = np.random.default_rng(11)
+    xs = rng.uniform(-66, 66, 20_000)
+    ys = rng.uniform(-26, 26, 20_000)
+    pts = spark.createDataFrame(
+        pd.DataFrame({"pid": np.arange(len(xs)), "lon": xs, "lat": ys})
+    )
+    for n in (8, 24):
+        rings = [
+            _jagged_star(rng, -54 + (i % 10) * 12.0, -20 + (i // 10) * 10.0, n=n,
+                         r0=1.5, r1=4.5)
+            for i in range(50)
+        ]
+        spark.createDataFrame(
+            pd.DataFrame(
+                {
+                    "poly_id": np.arange(50),
+                    "geometry": [wkb.dumps(("Polygon", [r])) for r in rings],
+                }
+            )
+        ).write.mode("overwrite").parquet(path)
+        polys = spark.read.parquet(path)
+        want = {
+            (int(p), i) for i, r in enumerate(rings) for p in np.nonzero(_covers_oracle(r, xs, ys))[0]
+        }
+        out = joins.tile_join_points(pts, polys, poly_cols=["poly_id"])
+        assert "segs" in out._jdf.queryExecution().optimizedPlan().toString()
+        got = [(r.pid, r.poly_id) for r in out.select("pid", "poly_id").collect()]
+        assert len(got) == len(want) and set(got) == want, n
