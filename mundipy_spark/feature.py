@@ -14,7 +14,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from mundipy_spark.kernels import constructive, measure, overlay, predicates, wkb
+from mundipy_spark.kernels import constructive, measure, overlay, predicates, proj, wkb
 
 
 def _as_geom(other):
@@ -365,15 +365,207 @@ def _svg_fragment(geom, scale_factor: float, color: str | None, valid: bool) -> 
     return "<g>" + "".join(parts) + "</g>"
 
 
+# the kernels' 'on' tolerance: predicates.bbox_disjoint pads by it, and
+# points_on_segments / the point-point test of predicates.intersects use it
+_ON_EPS = 1e-9
+
+# row kinds of the prepared layer; _SCALAR rows (GeometryCollections,
+# empty or non-finite geometries, lines with a one-vertex part) are
+# answered by the scalar kernels
+_SCALAR, _POINTS, _LINES, _AREAS = 0, 1, 2, 3
+
+
+def _point_xy(g):
+    """(x, y) of a Point probe as wkb.loads gives it, else None: other
+    probes take the scalar kernels."""
+    if g[0] != "Point":
+        return None
+    d = np.asarray(g[1], dtype=np.float64)
+    return (d[0], d[1]) if d.shape == (2,) else None
+
+
+def _bounds(g, xy):
+    """wkb.bounds(g), without its per-array loop when xy = _point_xy(g)."""
+    if xy is None:
+        return wkb.bounds(g)
+    x, y = float(xy[0]), float(xy[1])
+    return x, y, x, y
+
+
+def _ranges(off: np.ndarray, rows: np.ndarray):
+    """Flat positions of the ranges off[r]:off[r+1] for r in rows, the
+    position in `rows` each comes from, and each range's start and
+    length in the output."""
+    lo = off[rows]
+    n = off[rows + 1] - lo
+    start = np.cumsum(n) - n
+    pos = np.arange(int(n.sum()), dtype=np.int64) + np.repeat(lo - start, n)
+    return pos, np.repeat(np.arange(len(rows)), n), start, n
+
+
+class _FlatLayer:
+    """A side layer as flat arrays (the GEOS PreparedGeometry role,
+    reference dataset.py:113-162), built once per LocalIndex:
+
+    - `kind` per row, and every vertex of the non-scalar rows in
+      `vx`/`vy` with per-row offsets `voff`;
+    - the boundary edges of line and area rows as vertex-index pairs
+      `ea`→`eb`, with per-row offsets `eoff`, the polygon part `epoly`
+      each ring edge belongs to (-1 for line edges), `eparity` (the
+      ring has >= 3 vertices, so the edge counts in the even-odd
+      parity) and `ewrap` (the edge closes its ring).
+
+    Rings carry all n edges of `crossings_in_ring`; a ring's closing
+    edge is a boundary segment only where its end vertices are not
+    `np.allclose` in the coordinates at hand, as in
+    `predicates._ring_segments`.
+    """
+
+    def __init__(self, geoms: list):
+        n_rows = len(geoms)
+        kind = np.zeros(n_rows, dtype=np.int8)
+        arrs, row, cls, poly = [], [], [], []  # per coordinate array
+        n_poly = 0
+        for r, g in enumerate(geoms):
+            t, data = g
+            if t in ("Point", "MultiPoint"):
+                parts = [np.asarray(data, dtype=np.float64).reshape(-1, 2)]
+                ok = len(parts[0]) > 0
+                k, c = _POINTS, 0
+            elif t in ("LineString", "MultiLineString"):
+                parts = [
+                    np.asarray(p, dtype=np.float64).reshape(-1, 2)
+                    for p in ([data] if t == "LineString" else data)
+                ]
+                # a one-vertex part has no segment, but a line whose
+                # parts all collapse counts it as a point
+                # (predicates._collapse_degenerate_lines)
+                ok = all(len(p) != 1 for p in parts) and any(len(p) for p in parts)
+                k, c = _LINES, 2
+            elif t in ("Polygon", "MultiPolygon"):
+                polys = [data] if t == "Polygon" else data
+                parts = [np.asarray(ring, dtype=np.float64).reshape(-1, 2) for p in polys for ring in p]
+                ok = any(len(p) >= 2 for p in parts)
+                k, c = _AREAS, 1
+            else:
+                ok = False
+            if not ok:
+                continue
+            kind[r] = k
+            if c == 1:
+                for p in polys:
+                    for ring in p:
+                        poly.append(n_poly)
+                    n_poly += 1
+            else:
+                poly.extend([-1] * len(parts))
+            arrs.extend(parts)
+            row.extend([r] * len(parts))
+            cls.extend([c] * len(parts))
+
+        lens = np.fromiter((len(a) for a in arrs), dtype=np.int64, count=len(arrs))
+        row = np.asarray(row, dtype=np.int64)
+        cls = np.asarray(cls, dtype=np.int8)
+        poly = np.asarray(poly, dtype=np.int64)
+        v = np.concatenate(arrs) if arrs else np.empty((0, 2))
+        self.vx, self.vy = np.ascontiguousarray(v[:, 0]), np.ascontiguousarray(v[:, 1])
+        # non-finite coordinates take the scalar kernels
+        bad = ~(np.isfinite(self.vx) & np.isfinite(self.vy))
+        kind[np.repeat(row, lens)[bad]] = _SCALAR
+        self.kind = kind
+        self.voff = np.zeros(n_rows + 1, dtype=np.int64)
+        np.cumsum(np.bincount(row, weights=lens, minlength=n_rows).astype(np.int64), out=self.voff[1:])
+
+        # edges: n per ring, n - 1 per line part, none below 2 vertices
+        vstart = np.cumsum(lens) - lens
+        ne = np.where(lens < 2, 0, np.where(cls == 1, lens, lens - 1))
+        ne[cls == 0] = 0
+        src = np.repeat(np.arange(len(arrs)), ne)
+        local = np.arange(int(ne.sum()), dtype=np.int64) - np.repeat(np.cumsum(ne) - ne, ne)
+        self.ewrap = (cls[src] == 1) & (local == lens[src] - 1)
+        self.ea = vstart[src] + local
+        self.eb = np.where(self.ewrap, vstart[src], self.ea + 1)
+        self.epoly = poly[src]
+        self.eparity = (cls[src] == 1) & (lens[src] >= 3)
+        self.eoff = np.zeros(n_rows + 1, dtype=np.int64)
+        np.cumsum(np.bincount(row[src], minlength=n_rows), out=self.eoff[1:])
+
+    def probe_point(self, rows, x, y, X, Y, shift):
+        """Point (x, y) against the non-scalar `rows`, in the coordinate
+        system of X, Y (row r's vertex i is X[voff[r] + i + shift]):
+        returns (hit, m) per row — hit is the boundary-inclusive
+        `predicates.intersects` decision without its bbox gate, and m
+        the distance `measure.geom_distance_planar` measures when they
+        do not intersect, by the same formulas as the scalar kernels."""
+        pts = self.kind[rows] == _POINTS
+        if pts.all():
+            return self._near_points(rows, x, y, X, Y, shift)
+        if not pts.any():
+            return self._near_edges(rows, x, y, X, Y, shift)
+        hit, m = np.empty(len(rows), dtype=bool), np.empty(len(rows))
+        for sel, near in ((pts, self._near_points), (~pts, self._near_edges)):
+            hit[sel], m[sel] = near(rows[sel], x, y, X, Y, shift[sel])
+        return hit, m
+
+    def _near_points(self, rows, x, y, X, Y, shift):
+        # the point-set test of predicates.intersects and distance of
+        # measure.geom_distance_planar
+        v, _, start, n = _ranges(self.voff, rows)
+        v += np.repeat(shift, n)
+        m = np.sqrt(np.minimum.reduceat((X[v] - x) ** 2 + (Y[v] - y) ** 2, start))
+        return m <= _ON_EPS, m
+
+    def _near_edges(self, rows, x, y, X, Y, shift):
+        e, cpos, start, n = _ranges(self.eoff, rows)
+        sh = np.repeat(shift, n)
+        a, b = self.ea[e] + sh, self.eb[e] + sh
+        xi, yi, xj, yj = X[a], Y[a], X[b], Y[b]
+        # predicates.point_segs_min_dist
+        dx, dy = xj - xi, yj - yi
+        ln2 = dx * dx + dy * dy
+        ln2 = np.where(ln2 == 0, 1.0, ln2)
+        t = np.clip(((x - xi) * dx + (y - yi) * dy) / ln2, 0.0, 1.0)
+        d2 = (x - (xi + t * dx)) ** 2 + (y - (yi + t * dy)) ** 2
+        w = np.flatnonzero(self.ewrap[e])
+        if len(w):  # np.allclose(ring[0], ring[-1]) drops the closing edge
+            first, last = b[w], a[w]
+            closed = (np.abs(X[first] - X[last]) <= 1e-8 + 1e-5 * np.abs(X[last])) & (
+                np.abs(Y[first] - Y[last]) <= 1e-8 + 1e-5 * np.abs(Y[last])
+            )
+            d2[w[closed]] = np.inf
+        m = np.sqrt(np.minimum.reduceat(d2, start))
+        hit = m <= _ON_EPS
+        par = self.eparity[e]
+        if par.any():
+            # predicates.crossings_in_ring, summed per polygon part
+            # (dy == 0 edges never cross: their divisor is replaced)
+            xint = (xj - xi) * (y - yi) / np.where(dy == 0, 1.0, dy) + xi
+            cross = par & ((yi > y) != (yj > y)) & (x < xint)
+            ep = self.epoly[e]
+            runs = np.concatenate(([0], np.flatnonzero(ep[1:] != ep[:-1]) + 1))
+            odd = np.add.reduceat(cross, runs, dtype=np.int64) & 1
+            hit[cpos[runs[odd == 1]]] = True
+        return hit, m
+
+
 class LocalIndex:
     """Executor-local spatial index over a broadcast layer — the object
     Mundi.q injects for each named side dataset (the role the reference's
     fiona/PostGIS-indexed Dataset plays per probe, dataset.py:143-206).
 
-    Holds vectorized bbox arrays + parsed geometries; probes are numpy
-    over all rows (layers small enough to broadcast) with the reference's
-    semantics: point probes buffered by 1e-3 deg (dataset.py:159),
-    nearest returns None on empty (dataset.py:201-206).
+    Holds the parsed geometries, their bbox arrays and the layer as flat
+    vertex and edge arrays (`_FlatLayer`), all built once. A Point probe
+    is answered with one numpy pass over its bbox candidates: even-odd
+    parity per polygon part plus the 1e-9 on-edge test for intersects,
+    and for within/nearest the exact `measure.geom_distance_m` distance
+    in the same per-pair UTM projection, from the layer's coordinates
+    projected once per (zone, hemisphere) and cached on this object (so
+    once per worker for a broadcast index). Pairs projected to AEQD
+    (wide extents, polar caps, the antimeridian), scalar-kind rows such
+    as GeometryCollections, and non-Point probes take the scalar
+    kernels. Semantics are the reference's: point probes buffered by
+    1e-3 deg (dataset.py:159), nearest returns None on empty
+    (dataset.py:201-206).
     """
 
     def __init__(self, rows: list[tuple[bytes, dict]], uscale: float = 1.0):
@@ -387,6 +579,9 @@ class LocalIndex:
         self.minx, self.miny, self.maxx, self.maxy = b.T if len(b) else (
             np.empty(0), np.empty(0), np.empty(0), np.empty(0)
         )
+        self._flat = _FlatLayer(self.geoms)
+        self._utm: dict = {}
+        self._last_probe = (None, None)
 
     @classmethod
     def from_dataframe(cls, df, geom_col: str = "geometry"):
@@ -400,12 +595,20 @@ class LocalIndex:
 
     def with_scale(self, uscale: float) -> "LocalIndex":
         """Shallow view with a different session unit scale (arrays
-        shared) — Mundi(units=...) wraps side layers through this."""
+        shared, projection cache its own) — Mundi(units=...) wraps side
+        layers through this."""
         import copy
 
         ix = copy.copy(self)
         ix.uscale = uscale
+        ix._utm, ix._last_probe = {}, (None, None)
         return ix
+
+    def __getstate__(self):
+        state = self.__dict__.copy()
+        # filled per process, never shipped
+        state["_utm"], state["_last_probe"] = {}, (None, None)
+        return state
 
     def __len__(self) -> int:
         return len(self.geoms)
@@ -433,21 +636,109 @@ class LocalIndex:
             & (self.miny <= qmaxy)
         )[0]
 
-    def inside_bbox(self, bbox) -> list[Feature]:
-        idx = self._bbox_candidates(*bbox)
+    def _features(self, idx) -> list[Feature]:
         return [Feature(self.geoms[i], self.props[i], self.uscale) for i in idx]
+
+    def inside_bbox(self, bbox) -> list[Feature]:
+        return self._features(self._bbox_candidates(*bbox))
+
+    def _utm_layer(self, zone: int, south: bool):
+        """The layer's vertices in one UTM zone, projected on first use:
+        (rows, vertex offsets, x, y, bbox) over the rows a pair in that
+        zone can involve. A pair takes the zone of its union bbox's
+        centre and spans at most 6 deg of lon and 40 deg of lat, so its
+        row lies within 3 deg of lon of the zone and on its side of
+        20 deg beyond the equator."""
+        key = (zone, south)
+        got = self._utm.get(key)
+        if got is None:
+            fl = self._flat
+            lo = -np.inf if zone == 1 else zone * 6.0 - 186.0
+            hi = np.inf if zone == 60 else zone * 6.0 - 180.0
+            keep = (fl.kind != _SCALAR) & (self.minx >= lo - 3.01) & (self.maxx <= hi + 3.01)
+            keep &= (self.maxy <= 20.01) if south else (self.miny >= -20.01)
+            rows = np.flatnonzero(keep)
+            v, _, start, _ = _ranges(fl.voff, rows)
+            with np.errstate(all="ignore"):
+                x, y = proj.utm_forward(fl.vx[v], fl.vy[v], zone, south)
+            bbox = np.column_stack([
+                f.reduceat(c, start) if len(rows) else np.empty(0)
+                for f, c in ((np.minimum, x), (np.minimum, y), (np.maximum, x), (np.maximum, y))
+            ])
+            got = self._utm[key] = (rows, start, x, y, bbox)
+        return got
+
+    def _utm_probe(self, x, y, zone: int, south: bool):
+        """The probe projected like transform_geom projects a Point; the
+        last one is kept, as nearest and within often share a probe."""
+        key = (x, y, zone, south)
+        if self._last_probe[0] != key:
+            px, py = proj.utm_forward(np.asarray([x]), np.asarray([y]), zone, south)
+            self._last_probe = (key, (px[0], py[0]))
+        return self._last_probe[1]
+
+    def _point_distances(self, idx: np.ndarray, g):
+        """measure.geom_distance_m(self.geoms[i], g) for each i in idx,
+        g a Point, except where the returned mask is set: those pairs
+        need the scalar kernel. Per pair, the projection is the one
+        proj.local_projection picks for the pair's union bbox; a pair
+        that intersects there is at 0, else at the planar distance."""
+        x, y = _point_xy(g)
+        out = np.full(len(idx), np.nan)
+        minx, maxx = np.minimum(self.minx[idx], x), np.maximum(self.maxx[idx], x)
+        miny, maxy = np.minimum(self.miny[idx], y), np.maximum(self.maxy[idx], y)
+        cx, cy = (minx + maxx) / 2.0, (miny + maxy) / 2.0
+        utm = ((maxx - minx) <= 6.0) & ((maxy - miny) <= 40.0) & (cy >= -80.0) & (cy <= 84.0)
+        scalar = ~utm | (self._flat.kind[idx] == _SCALAR)
+        todo = np.flatnonzero(~scalar)
+        key = proj.utm_zone(cx[todo], cy[todo]) * 2 + (cy[todo] < 0)
+        while len(todo):
+            same = key == key[0]
+            grp, zone, south = todo[same], int(key[0]) // 2, bool(key[0] % 2)
+            todo, key = todo[~same], key[~same]
+            rows, start, X, Y, bbox = self._utm_layer(zone, south)
+            r = idx[grp]
+            pos = np.minimum(np.searchsorted(rows, r), len(rows) - 1)
+            inwin = rows[pos] == r if len(rows) else np.zeros(len(r), dtype=bool)
+            if not inwin.all():  # not reached: see _utm_layer
+                scalar[grp[~inwin]] = True
+                grp, r, pos = grp[inwin], r[inwin], pos[inwin]
+            px, py = self._utm_probe(x, y, zone, south)
+            hit, m = self._flat.probe_point(r, px, py, X, Y, start[pos] - self._flat.voff[r])
+            # intersects -> 0, behind predicates.bbox_disjoint's gate
+            for j in np.flatnonzero(hit):
+                bx0, by0, bx1, by1 = bbox[pos[j]]
+                if not (bx1 < px - _ON_EPS or px < bx0 - _ON_EPS or by1 < py - _ON_EPS or py < by0 - _ON_EPS):
+                    m[j] = 0.0
+            out[grp] = m
+        return out, scalar
 
     def intersects(self, probe) -> list[Feature]:
         g = _as_geom(probe)
-        minx, miny, maxx, maxy = wkb.bounds(g)
+        xy = _point_xy(g)
+        minx, miny, maxx, maxy = _bounds(g, xy)
         if g[0] == "Point":  # degenerate-bbox epsilon (dataset.py:159)
             minx, miny, maxx, maxy = minx - 1e-3, miny - 1e-3, maxx + 1e-3, maxy + 1e-3
         idx = self._bbox_candidates(minx, miny, maxx, maxy)
-        out = []
-        for i in idx:
-            if predicates.intersects(self.geoms[i], g):
-                out.append(Feature(self.geoms[i], self.props[i], self.uscale))
-        return out
+        if xy is None:
+            return self._features(i for i in idx if predicates.intersects(self.geoms[i], g))
+        x, y = xy
+        # predicates.bbox_disjoint, then the prepared decision
+        idx = idx[
+            ~(
+                (self.maxx[idx] < x - _ON_EPS) | (x < self.minx[idx] - _ON_EPS)
+                | (self.maxy[idx] < y - _ON_EPS) | (y < self.miny[idx] - _ON_EPS)
+            )
+        ]
+        fl = self._flat
+        scalar = fl.kind[idx] == _SCALAR
+        keep = np.zeros(len(idx), dtype=bool)
+        prep = np.flatnonzero(~scalar)
+        if len(prep):
+            keep[prep], _ = fl.probe_point(idx[prep], x, y, fl.vx, fl.vy, np.zeros(len(prep), dtype=np.int64))
+        for j in np.flatnonzero(scalar):
+            keep[j] = predicates.intersects(self.geoms[idx[j]], g)
+        return self._features(idx[keep])
 
     def within(self, radius: float, probe) -> list[Feature]:
         """radius is in SESSION units (feet under Mundi(units='feet')) —
@@ -468,7 +759,8 @@ class LocalIndex:
         # 111.32*cos(lat) km, so the lon pad must scale by 1/cos at the
         # highest |lat| the radius can reach — a flat 1.5x fudge
         # undercovers above ~48 deg and silently drops true matches.
-        minx, miny, maxx, maxy = wkb.bounds(g)
+        xy = _point_xy(g)
+        minx, miny, maxx, maxy = _bounds(g, xy)
         pad_lat = radius_m / 110_000.0 + 1e-9
         lat_hi = min(max(abs(miny), abs(maxy)) + pad_lat, 89.9)
         coslat = max(np.cos(np.radians(lat_hi)), 1e-6)
@@ -476,11 +768,14 @@ class LocalIndex:
         idx = self._bbox_candidates(
             minx - pad_lon, miny - pad_lat, maxx + pad_lon, maxy + pad_lat
         )
-        out = []
-        for i in idx:
-            if measure.geom_distance_m(self.geoms[i], g) <= radius_m:
-                out.append(Feature(self.geoms[i], self.props[i], self.uscale))
-        return out
+        if xy is None or not len(idx):
+            return self._features(
+                i for i in idx if measure.geom_distance_m(self.geoms[i], g) <= radius_m
+            )
+        d, scalar = self._point_distances(idx, g)
+        for j in np.flatnonzero(scalar):
+            d[j] = measure.geom_distance_m(self.geoms[idx[j]], g)
+        return self._features(idx[d <= radius_m])
 
     def nearest(self, probe) -> Feature | None:
         g = _as_geom(probe)
@@ -488,7 +783,8 @@ class LocalIndex:
             return None
         # best-first candidate scan over a TRUE meter lower bound, exact
         # refine. Bbox-to-bbox gaps in degrees:
-        pminx, pminy, pmaxx, pmaxy = wkb.bounds(g)
+        xy = _point_xy(g)
+        pminx, pminy, pmaxx, pmaxy = _bounds(g, xy)
         dx = np.maximum(np.maximum(self.minx - pmaxx, pminx - self.maxx), 0.0)
         # antimeridian wrap: the gap the other way around is 360 minus
         # the hull span of the two lon intervals
@@ -508,10 +804,34 @@ class LocalIndex:
         lb_m = np.maximum(dy * 110_000.0, dx * 70_000.0 * coslat)
         order = np.argsort(lb_m)
         best, best_d = None, np.inf
-        for i in order:
-            if lb_m[i] > best_d:
-                break
-            d = measure.geom_distance_m(self.geoms[int(i)], g)
-            if d < best_d:
-                best, best_d = int(i), d
+        if xy is None:
+            for i in order:
+                if lb_m[i] > best_d:
+                    break
+                d = measure.geom_distance_m(self.geoms[int(i)], g)
+                if d < best_d:
+                    best, best_d = int(i), d
+        else:
+            # the same scan, measured in blocks: the first 8 candidates,
+            # then all whose bound is within the best distance so far;
+            # scalar-kernel pairs are measured only when the scan
+            # reaches them
+            lb_sorted = lb_m[order]
+            pos, n = 0, len(order)
+            while pos < n and not lb_sorted[pos] > best_d:
+                end = pos + 8 if best_d == np.inf else pos + max(
+                    1, int(np.searchsorted(lb_sorted[pos:], best_d, side="right"))
+                )
+                block = order[pos:end]
+                ds, scalar = self._point_distances(block, g)
+                for i, d, sc in zip(block.tolist(), ds.tolist(), scalar.tolist()):
+                    if lb_m[i] > best_d:
+                        pos = n
+                        break
+                    if sc:
+                        d = measure.geom_distance_m(self.geoms[i], g)
+                    if d < best_d:
+                        best, best_d = i, d
+                else:
+                    pos = end
         return Feature(self.geoms[best], self.props[best], self.uscale) if best is not None else None

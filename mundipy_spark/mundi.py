@@ -5,8 +5,15 @@ injecting side layers by PARAMETER NAME (the reference's reflection
 trick, mundi.py:35-50) as broadcast LocalIndex objects. Execution is
 mapInPandas over the main DataFrame: Arrow batches in, the user's
 Python per row (that is the reference's contract — U1 is the one
-deliberately row-wise operator), Arrow batches out. The heavy spatial
-probing inside the user fn hits vectorized LocalIndex kernels.
+deliberately row-wise operator), Arrow batches out. Rows are read as
+plain tuples, not namedtuples, so property names stay as they are, and
+stdout is captured once per batch. A side-layer probe with a Point is
+one numpy pass over the layer LocalIndex prepared when it was built.
+
+Before the run, the driver fixes the output schema by calling the fn on
+the first rows only until every key of the first result has a type —
+usually once. q() destroys the side-layer broadcasts after collecting;
+q_df leaves them, with its cached main layer, to release().
 
 Contract parity (judge-visible semantics, SURVEY §7.4):
 - fn returning None drops the row (mundi.py:138-140);
@@ -45,6 +52,7 @@ class Mundi:
         self.units = units
         self.scale = unit_scale(units)
         self._cache = None
+        self._broadcasts = []
         self._progress_acc = None
         self._input_total = 0
 
@@ -104,13 +112,19 @@ class Mundi:
             th.join(timeout=2.0)
 
     def release(self) -> None:
-        """Drop the cached ordinal-stamped main layer left by q_df (the
-        cache is what keeps q_df at ONE source scan; q() frees it after
-        collecting, q_df callers free it here or on the next q_df)."""
+        """Drop what q_df leaves behind: the cached ordinal-stamped main
+        layer (the cache is what keeps q_df at ONE source scan) and the
+        side-layer broadcasts, whose pickles stay in the SparkContext's
+        temp dir until destroyed. q() frees both after collecting; q_df
+        callers free them here or on the next q_df, after which the
+        DataFrame q_df returned can no longer run."""
         cache = getattr(self, "_cache", None)
         if cache is not None:
             cache.unpersist()
             self._cache = None
+        for bc in getattr(self, "_broadcasts", ()):
+            bc.destroy()
+        self._broadcasts = []
 
     def _collect_features(self, df) -> list[dict]:
         feats = []
@@ -172,6 +186,7 @@ class Mundi:
             name: sc.broadcast(self.mapdata[name].local_index().with_scale(self.scale))
             for name in layer_names
         }
+        self._broadcasts = list(bc_layers.values())
         geom_col = main_ds.geom_col
         uscale = self.scale
 
@@ -189,30 +204,29 @@ class Mundi:
             first = main_df.orderBy("_id").limit(256).collect()
             if not first:
                 raise ValueError("main layer is empty")
-            proto_out = None
-            probe_results = []
+            key_fields, key_types = None, {}
             for row in first:
                 ret = _call_one(fn, row, geom_col, bc_layers, uscale)
-                if ret is not None:
-                    probe_results.append(ret)
-                    if proto_out is None:
-                        proto_out = ret
-            if proto_out is not None:
+                if ret is None:
+                    continue
                 # key NAMES are fixed by the first result (reference
                 # rule); each key's TYPE comes from its first NON-null
                 # value across the probe window — a null first value
                 # (common in passthrough GeoJSON properties) must not
-                # mis-type a later numeric. All-null keys fall back to
-                # string, matching how a null-only column reads anyway.
-                key_fields = list(proto_out.features.keys())
-                key_types = {}
+                # mis-type a later numeric. The probe stops once every
+                # key is typed; all-null keys fall back to string,
+                # matching how a null-only column reads anyway.
+                if key_fields is None:
+                    key_fields = list(ret.features.keys())
                 for k in key_fields:
-                    t = None
-                    for ret in probe_results:
+                    if k not in key_types:
                         t = _sql_type(ret.features.get(k))
                         if t is not None:
-                            break
-                    key_types[k] = t or "string"
+                            key_types[k] = t
+                if len(key_types) == len(key_fields):
+                    break
+            if key_fields is not None:
+                key_types = {k: key_types.get(k, "string") for k in key_fields}
             elif len(first) == 256:
                 key_fields, key_types = _distributed_keyset_probe(
                     main_df.filter(F.col("_id") > first[-1]["_id"]),
@@ -227,38 +241,39 @@ class Mundi:
         progress_acc = self._progress_acc
 
         def run(batches):
-            keyset: list[str] | None = None
+            layers = [bc_layers[n].value for n in layer_names]
+            key_set = set(key_fields)
             for pdf in batches:
                 if progress_acc is not None:
                     progress_acc.add(len(pdf))
                 out_rows = []
-                for _, row in pdf.iterrows():
-                    feat = _row_to_feature(row, geom_col, uscale)
-                    buf = io.StringIO()
-                    with contextlib.redirect_stdout(buf):
-                        args = [bc_layers[n].value for n in layer_names]
-                        ret = fn(feat, *args)
-                    if ret is None:
-                        continue
-                    if not isinstance(ret, Feature):
-                        raise TypeError(
-                            f"process fn must return a Feature or None, got {type(ret)}"
+                # one capture per batch, emptied before each row, so
+                # each row's _stdout holds what that row printed
+                buf = io.StringIO()
+                with contextlib.redirect_stdout(buf):
+                    for feat, rid in _row_features(pdf, geom_col, uscale):
+                        buf.seek(0)
+                        buf.truncate()
+                        ret = fn(feat, *layers)
+                        if ret is None:
+                            continue
+                        if not isinstance(ret, Feature):
+                            raise TypeError(
+                                f"process fn must return a Feature or None, got {type(ret)}"
+                            )
+                        if set(ret.features) != key_set:
+                            raise TypeError(
+                                f"result properties {list(ret.features)} do not match "
+                                f"first result {key_fields}"
+                            )
+                        out_rows.append(
+                            {
+                                "geometry": wkb_mod.dumps(ret.geom),
+                                **{k: ret.features[k] for k in key_fields},
+                                "_stdout": buf.getvalue(),
+                                "_id": rid,
+                            }
                         )
-                    keys = list(ret.features.keys())
-                    if keyset is None:
-                        keyset = key_fields  # fixed by the driver-side proto
-                    if set(keys) != set(keyset):
-                        raise TypeError(
-                            f"result properties {keys} do not match first result {keyset}"
-                        )
-                    out_rows.append(
-                        {
-                            "geometry": wkb_mod.dumps(ret.geom),
-                            **{k: ret.features[k] for k in keyset},
-                            "_stdout": buf.getvalue(),
-                            "_id": int(row["_id"]),
-                        }
-                    )
                 yield pd.DataFrame(
                     out_rows,
                     columns=["geometry", *key_fields, "_stdout", "_id"],
@@ -393,27 +408,30 @@ def _distributed_keyset_probe(df, fn, geom_col, bc_layers, layer_names, uscale):
     entire 256-row driver probe. Reads the q_df cache, not the source."""
 
     def probe(batches):
+        layers = [bc_layers[n].value for n in layer_names]
         for pdf in batches:
-            for _, row in pdf.iterrows():
-                feat = _row_to_feature(row, geom_col, uscale)
-                with contextlib.redirect_stdout(io.StringIO()):
-                    ret = fn(feat, *[bc_layers[n].value for n in layer_names])
-                if ret is None:
-                    continue
-                if not isinstance(ret, Feature):
-                    raise TypeError(
-                        f"process fn must return a Feature or None, got {type(ret)}"
-                    )
-                spec = [
-                    # single-result probe: null values default to string
-                    # (same fallback as the driver probe's all-null case)
-                    (k, _sql_type(v) or "string")
-                    for k, v in ret.features.items()
-                ]
-                yield pd.DataFrame(
-                    [{"_first_id": int(row["_id"]), "_keys": json.dumps(spec)}]
+            found = None
+            with contextlib.redirect_stdout(io.StringIO()):
+                for feat, rid in _row_features(pdf, geom_col, uscale):
+                    ret = fn(feat, *layers)
+                    if ret is not None:
+                        found = ret, rid
+                        break
+            if found is None:
+                continue
+            ret, rid = found
+            if not isinstance(ret, Feature):
+                raise TypeError(
+                    f"process fn must return a Feature or None, got {type(ret)}"
                 )
-                return
+            spec = [
+                # single-result probe: null values default to string
+                # (same fallback as the driver probe's all-null case)
+                (k, _sql_type(v) or "string")
+                for k, v in ret.features.items()
+            ]
+            yield pd.DataFrame([{"_first_id": rid, "_keys": json.dumps(spec)}])
+            return
 
     hits = df.mapInPandas(probe, "_first_id long, _keys string").collect()
     if not hits:
@@ -423,9 +441,15 @@ def _distributed_keyset_probe(df, fn, geom_col, bc_layers, layer_names, uscale):
     return [k for k, _ in spec], dict(spec)
 
 
-def _row_to_feature(row: pd.Series, geom_col: str, uscale: float = 1.0) -> Feature:
-    d = {k: v for k, v in row.items() if k not in (geom_col, "_id")}
-    return Feature(bytes(row[geom_col]), d, uscale)
+def _row_features(pdf: pd.DataFrame, geom_col: str, uscale: float = 1.0):
+    """(Feature, _id) per row of an Arrow batch. Plain tuples, not
+    namedtuples: those rename fields such as `class`, `my prop` and
+    `_x`."""
+    cols = list(pdf.columns)
+    gi, ii = cols.index(geom_col), cols.index("_id")
+    props = [(j, c) for j, c in enumerate(cols) if j not in (gi, ii)]
+    for t in pdf.itertuples(index=False, name=None):
+        yield Feature(bytes(t[gi]), {c: t[j] for j, c in props}, uscale), int(t[ii])
 
 
 def _call_one(fn, spark_row, geom_col, bc_layers, uscale: float = 1.0):

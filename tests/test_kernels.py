@@ -768,3 +768,163 @@ def test_wkb_has_z_false_on_all_engine_encoded_geoms():
     ]
     for g in geoms:
         assert not wkb.wkb_has_z(wkb.dumps(g)), g[0]
+
+
+# --- LocalIndex prepared point probes vs the scalar kernels -------------------
+
+
+def scalar_local_index_probes(ix, g, radius_m):
+    """The per-candidate loops LocalIndex ran for every probe before its
+    layer was prepared — one predicates.intersects / measure.geom_distance_m
+    call per candidate — as the reference for the prepared Point path.
+    Returns (intersects rows, within rows, nearest row)."""
+    minx, miny, maxx, maxy = wkb.bounds(g)
+    if g[0] == "Point":
+        minx, miny, maxx, maxy = minx - 1e-3, miny - 1e-3, maxx + 1e-3, maxy + 1e-3
+    inter = [
+        int(i) for i in ix._bbox_candidates(minx, miny, maxx, maxy)
+        if predicates.intersects(ix.geoms[i], g)
+    ]
+    d = np.array([measure.geom_distance_m(h, g) for h in ix.geoms])
+    pminx, pminy, pmaxx, pmaxy = wkb.bounds(g)
+    pad_lat = radius_m / 110_000.0 + 1e-9
+    coslat = max(np.cos(np.radians(min(max(abs(pminy), abs(pmaxy)) + pad_lat, 89.9))), 1e-6)
+    pad_lon = radius_m / (110_000.0 * coslat) + 1e-9
+    cand = ix._bbox_candidates(pminx - pad_lon, pminy - pad_lat, pmaxx + pad_lon, pmaxy + pad_lat)
+    within = [int(i) for i in cand if d[i] <= radius_m]
+    dx = np.maximum(np.maximum(ix.minx - pmaxx, pminx - ix.maxx), 0.0)
+    hull = np.maximum(ix.maxx, pmaxx) - np.minimum(ix.minx, pminx)
+    dx = np.minimum(dx, np.maximum(360.0 - hull, 0.0))
+    dy = np.maximum(np.maximum(ix.miny - pmaxy, pminy - ix.maxy), 0.0)
+    lat_hi = np.maximum(np.maximum(np.abs(ix.miny), np.abs(ix.maxy)), max(abs(pminy), abs(pmaxy)))
+    lb_m = np.maximum(dy * 110_000.0, dx * 70_000.0 * np.cos(np.radians(np.minimum(lat_hi, 89.99))))
+    best, best_d = None, np.inf
+    for i in np.argsort(lb_m):
+        if lb_m[i] > best_d:
+            break
+        if d[i] < best_d:
+            best, best_d = int(i), d[i]
+    return inter, within, best
+
+
+def _check_probes_match_scalar(ix, probes, radii=(0.0, 50.0, 500.0)):
+    for p in probes:
+        g = ("Point", np.asarray(p, dtype=np.float64))
+        for r in radii:
+            inter, within, best = scalar_local_index_probes(ix, g, r)
+            assert [f["i"] for f in ix.intersects(g)] == inter, p
+            assert [f["i"] for f in ix.within(r, g)] == within, (p, r)
+            got = ix.nearest(g)
+            assert (got["i"] if got is not None else None) == best, p
+
+
+def _square(x0, y0, s):
+    return np.array([[x0, y0], [x0 + s, y0], [x0 + s, y0 + s], [x0, y0 + s], [x0, y0]])
+
+
+EDGE_CASE_LAYER = [
+    ("Polygon", [_square(10.0, 50.0, 0.1), _square(10.03, 50.03, 0.04)[::-1]]),  # holed
+    ("MultiPolygon", [[_square(10.2, 50.0, 0.1)], [_square(10.25, 50.05, 0.1)]]),  # overlapping parts
+    ("LineString", np.array([[10.0, 50.2], [10.1, 50.25], [10.2, 50.2]])),
+    ("MultiLineString", [np.array([[10.3, 50.2], [10.35, 50.25]]), np.array([[10.36, 50.2], [10.4, 50.2]])]),
+    ("LineString", np.array([[10.4, 50.0], [10.4, 50.0]])),  # collapses to a point
+    ("Point", np.array([10.45, 50.05])),
+    ("MultiPoint", np.array([[10.5, 50.0], [10.5, 50.1]])),
+    ("GeometryCollection", [("Point", np.array([10.6, 50.0])), ("Polygon", [_square(10.55, 50.02, 0.1)])]),
+    ("Polygon", [_square(10.7, 50.0, 0.1)[:-1]]),  # ring not closed
+    ("Polygon", [np.vstack([_square(10.7, 50.2, 0.1)[:-1], [[10.7 + 1e-12, 50.2]]])]),  # allclose-closed
+    # open by 22 m, which np.allclose takes as closed: the gap is no
+    # boundary segment (predicates._ring_segments) but counts in parity
+    ("Polygon", [np.vstack([_square(10.9, 50.0, 0.1)[:-1], [[10.9, 50.0002]]])]),
+]
+
+
+def _edge_case_index():
+    from mundipy_spark.feature import LocalIndex
+
+    return LocalIndex([(wkb.dumps(g), {"i": i}) for i, g in enumerate(EDGE_CASE_LAYER)])
+
+
+def test_local_index_point_probes_match_scalar_on_edges_and_vertices():
+    """Point probes answered from the prepared layer give exactly the
+    scalar kernels' answers: holes and overlapping MultiPolygon parts
+    (per-part even-odd parity), lines and collapsed lines, points,
+    unclosed and allclose-closed rings, and a GeometryCollection row
+    (scalar kernels) — probed on every vertex, every edge midpoint, and
+    random points around them."""
+    from mundipy_spark.feature import _SCALAR
+
+    ix = _edge_case_index()
+    assert ix._flat.kind[7] == _SCALAR
+    assert (np.delete(ix._flat.kind, 7) != _SCALAR).all()
+    probes = []
+    for g in EDGE_CASE_LAYER:
+        for arr in wkb._coord_arrays(g):
+            probes.extend(arr)
+            probes.extend((arr[1:] + arr[:-1]) / 2.0)
+    probes += [(10.05, 50.05), (10.27, 50.07), (10.32, 50.12), (10.6, 50.07)]
+    probes += [(10.9, 50.0001), (10.9 - 7e-5, 50.0001)]  # on and 5 m off the gap
+    rng = np.random.default_rng(5)
+    probes += list(np.c_[rng.uniform(9.95, 10.85, 150), rng.uniform(49.95, 50.35, 150)])
+    _check_probes_match_scalar(ix, probes, radii=(0.0, 8.0, 50.0, 500.0))
+
+
+def test_local_index_point_distance_routes():
+    """Which pairs take the prepared distance and which the scalar
+    kernel: a pair whose union bbox centre falls in the neighbouring UTM
+    zone projects there; AEQD pairs (wide extents, polar caps, the
+    antimeridian) and GeometryCollection rows take the scalar kernel.
+    Every route gives measure.geom_distance_m's value."""
+    from mundipy_spark.feature import LocalIndex
+
+    layer = [
+        ("Point", np.array([17.9, 45.0])),  # zone 33; with the probe, 34
+        ("LineString", np.array([[10.0, 45.0], [17.5, 45.2]])),  # wider than 6 deg
+        ("Point", np.array([18.5, 85.5])),  # polar cap
+        ("Point", np.array([-179.95, 45.0])),  # across the antimeridian
+        ("GeometryCollection", [("Point", np.array([18.4, 45.1]))]),
+        ("Point", np.array([179.9, 45.0])),
+    ]
+    ix = LocalIndex([(wkb.dumps(g), {"i": i}) for i, g in enumerate(layer)])
+    probes = [np.array([18.3, 45.0]), np.array([18.3, 85.0]), np.array([179.95, 45.01])]
+    for p in probes:
+        g = ("Point", p)
+        idx = np.arange(len(layer))
+        d, scalar = ix._point_distances(idx, g)
+        ref = np.array([measure.geom_distance_m(h, g) for h in ix.geoms])
+        d[scalar] = ref[scalar]
+        assert np.allclose(d, ref, rtol=1e-9, atol=0.0)
+        names = [proj.local_projection(*np.r_[np.minimum(wkb.bounds(h)[:2], p), np.maximum(wkb.bounds(h)[2:], p)], purpose="distance")[0] for h in ix.geoms]
+        want = [not n.startswith("EPSG:") or layer[i][0] == "GeometryCollection" for i, n in enumerate(names)]
+        assert list(scalar) == want, (p, names)
+    assert (34, False) in ix._utm  # the first pair projected in zone 34
+    _check_probes_match_scalar(ix, probes, radii=(1e3, 1e6))
+
+
+def test_local_index_nearest_equidistant_tie_keeps_scalar_winner():
+    """Equidistant candidates (copies of the nearest stop among others):
+    nearest returns the one the scalar scan returns, the first in
+    lower-bound order, which for more than 16 rows argsort leaves in no
+    fixed row order."""
+    from mundipy_spark.feature import LocalIndex
+
+    rng = np.random.default_rng(11)
+    pts = list(np.c_[rng.uniform(14.0, 16.0, 40), rng.uniform(44.0, 46.0, 40)])
+    for i in (3, 17, 22, 38):
+        pts[i] = np.array([15.02, 45.01])
+    ix = LocalIndex([(wkb.dumps(("Point", p)), {"i": i}) for i, p in enumerate(pts)])
+    g = ("Point", np.array([15.0, 45.0]))
+    d, _ = ix._point_distances(np.arange(len(pts)), g)
+    assert d.min() == d[3] == d[17] == d[22] == d[38]
+    _check_probes_match_scalar(ix, [g[1], np.array([15.02, 45.01])])
+
+
+def test_local_index_with_scale_shares_arrays_not_projection_cache():
+    import pickle
+
+    ix = _edge_case_index()
+    feet = ix.with_scale(3.28083333)
+    assert feet._flat is ix._flat
+    feet.nearest(("Point", np.array([10.05, 50.05])))
+    assert feet._utm and not ix._utm
+    assert not pickle.loads(pickle.dumps(feet))._utm

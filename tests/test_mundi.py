@@ -575,3 +575,113 @@ def test_q_null_first_property_typed_from_later_row(spark):
     scores = {f["properties"]["name"]: f["properties"]["score"] for f in feats}
     assert scores["p0"] is None
     assert scores["p1"] == 1.5  # float, not the string '1.5'
+
+
+def _points_map(spark, n, side=False):
+    import numpy as np
+
+    from mundipy_spark.kernels import wkb as wkb_mod
+
+    rows = [
+        (wkb_mod.dumps(("Point", np.array([10.0 + i * 1e-3, 50.0]))), i) for i in range(n)
+    ]
+    layers = {"pts": Dataset(spark.createDataFrame(rows, "geometry binary, i long"))}
+    if side:
+        sq = np.array([[10.0, 49.9], [10.1, 49.9], [10.1, 50.1], [10.0, 50.1], [10.0, 49.9]])
+        layers["side"] = Dataset(
+            spark.createDataFrame([(wkb_mod.dumps(("Polygon", [sq])), 7)], "geometry binary, k long")
+        )
+    return Map(layers, spark=spark)
+
+
+def test_driver_keyset_probe_stops_once_every_key_is_typed(spark):
+    """The driver-side key-set probe calls the fn only until every key
+    of the first result has a type: once when the first result types
+    them all, and up to the row that types a key whose first value is
+    null. The closure list counts driver calls only (executors run
+    copies of the fn in other processes)."""
+    m = _points_map(spark, 300)
+    calls = []
+
+    def typed(p):
+        calls.append(p["i"])
+        p["k"] = p["i"] * 2
+        return p
+
+    feats = Mundi(m, "pts").q(typed)["features"]
+    assert len(feats) == 300 and calls == [0]
+
+    calls.clear()
+
+    def late(p):
+        calls.append(p["i"])
+        if p["i"] == 0:
+            return None
+        p["score"] = None if p["i"] < 4 else 1.5
+        return p
+
+    feats = Mundi(m, "pts").q(late)["features"]
+    assert calls == [0, 1, 2, 3, 4]
+    scores = {f["properties"]["i"]: f["properties"]["score"] for f in feats}
+    assert len(scores) == 299 and scores[1] is None and scores[4] == 1.5
+
+
+def test_q_row_loop_keeps_property_names_and_per_row_stdout(spark):
+    """Rows reach the fn with their property names as they are (a
+    namedtuple would rename `class`, `my prop` and `_x`), and each
+    row's _stdout holds exactly what that row printed, though stdout is
+    captured once per batch."""
+    import numpy as np
+
+    from mundipy_spark.kernels import wkb as wkb_mod
+
+    rows = [
+        (wkb_mod.dumps(("Point", np.array([float(i), 0.0]))), f"c{i}", i, i / 4)
+        for i in range(40)
+    ]
+    df = spark.createDataFrame(rows, "geometry binary, `class` string, `my prop` long, `_x` double")
+    m = Map({"pts": Dataset(df)}, spark=spark)
+
+    def proc(p):
+        if p["my prop"] % 3 == 0:
+            print(f"row {p['my prop']} {p['class']}")
+        if p["my prop"] % 4 == 1:
+            print("a", end="")
+            print("b")
+        p["seen"] = sorted(p.features)
+        p["seen"] = ",".join(p["seen"])
+        return p
+
+    feats = Mundi(m, "pts").q(proc)["features"]
+    assert len(feats) == 40
+    for f in feats:
+        props = f["properties"]
+        i = props["my prop"]
+        assert props["class"] == f"c{i}" and props["_x"] == i / 4
+        assert props["seen"] == "_x,class,my prop"
+        want = (f"row {i} c{i}\n" if i % 3 == 0 else "") + ("ab\n" if i % 4 == 1 else "")
+        assert props["_stdout"] == want, i
+
+
+def test_q_destroys_side_layer_broadcasts(spark):
+    """q() destroys its side-layer broadcasts after collecting, so their
+    pickles do not pile up in the SparkContext's temp dir; q_df's go
+    with release()."""
+    import os
+
+    sc = spark.sparkContext
+    m = _points_map(spark, 20, side=True)
+    mundi = Mundi(m, "pts")
+
+    def proc(p, side):
+        p["n"] = len(side.intersects(p))
+        return p
+
+    before = sorted(os.listdir(sc._temp_dir))
+    feats = mundi.q(proc)["features"]
+    assert sorted(f["properties"]["n"] for f in feats) == [1] * 20
+    assert sorted(os.listdir(sc._temp_dir)) == before
+    assert len(mundi.q_df(proc).collect()) == 20
+    assert len(os.listdir(sc._temp_dir)) == len(before) + 1
+    mundi.release()
+    assert sorted(os.listdir(sc._temp_dir)) == before

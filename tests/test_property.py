@@ -8,7 +8,7 @@ import numpy as np
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
-from mundipy_spark.kernels import constructive, measure, overlay, predicates, tiling, wkb
+from mundipy_spark.kernels import constructive, measure, overlay, predicates, proj, tiling, wkb
 
 settings.register_profile("kernels", max_examples=60, deadline=None)
 settings.load_profile("kernels")
@@ -183,3 +183,129 @@ def test_nearest_exact_at_high_latitude(lats, lons, plat, plon):
     assert got is not None
     # accept exact argmin or an equidistant twin (float ties)
     assert abs(dists[got["i"]] - dists[best]) <= 1e-6 * max(dists[best], 1.0)
+
+
+# --- LocalIndex prepared Point probes ------------------------------------------
+
+
+def _oracle_point_in_parts(x, y, parts, eps=1e-9):
+    """Even-odd point-in-polygon oracle in plain numpy: ray-crossing
+    parity per polygon part, OR over the parts, or within eps of an
+    edge. Returns (inside, distance to the nearest edge)."""
+    inside, dmin = False, np.inf
+    for rings in parts:
+        odd = False
+        for r in rings:
+            a = np.asarray(r, dtype=float)
+            b = np.roll(a, -1, axis=0)
+            (ax, ay), (bx, by) = a.T, b.T
+            span = (ay > y) != (by > y)
+            with np.errstate(divide="ignore", invalid="ignore"):
+                xc = ax + (y - ay) / (by - ay) * (bx - ax)
+            odd ^= bool(np.count_nonzero(span & (x < xc)) & 1)
+            ex, ey = bx - ax, by - ay
+            ll = ex * ex + ey * ey
+            u = np.clip(((x - ax) * ex + (y - ay) * ey) / np.where(ll > 0, ll, 1.0), 0.0, 1.0)
+            dmin = min(dmin, float(np.hypot(ax + u * ex - x, ay + u * ey - y).min()))
+        inside |= odd
+    return inside or dmin <= eps, dmin
+
+
+def _star(rng, cx, cy, r_lo, r_hi, n):
+    ang = np.sort(rng.uniform(0.0, 2 * np.pi, n))
+    rad = rng.uniform(r_lo, r_hi, n)
+    pts = np.c_[cx + rad * np.cos(ang), cy + rad * np.sin(ang)]
+    return np.vstack([pts, pts[:1]])
+
+
+@given(
+    seed=st.integers(0, 2**31 - 1),
+    cx=st.floats(-170.0, 170.0),
+    cy=st.floats(-70.0, 70.0),
+)
+def test_prepared_pip_matches_scalar_and_evenodd_oracle(seed, cx, cy):
+    """LocalIndex.intersects with a Point probe — answered from the
+    prepared layer — equals predicates.intersects on every probe, and a
+    numpy even-odd oracle wherever the probe is clearly off the boundary
+    or exactly on it: a holed polygon (the star may be self-crossing;
+    even-odd still defines it), a MultiPolygon with overlapping parts,
+    probed at vertices, edge midpoints and random points."""
+    from mundipy_spark.feature import LocalIndex
+
+    rng = np.random.default_rng(seed)
+    n = int(rng.integers(3, 12))
+    holed = [_star(rng, cx, cy, 0.05, 0.2, n), _star(rng, cx, cy, 0.01, 0.04, n)[::-1]]
+    multi = [[_star(rng, cx + 0.3, cy, 0.05, 0.15, n)], [_star(rng, cx + 0.35, cy + 0.05, 0.05, 0.15, n)]]
+    layer = [("Polygon", holed), ("MultiPolygon", multi)]
+    ix = LocalIndex([(wkb.dumps(g), {"i": i}) for i, g in enumerate(layer)])
+    rings = holed + [r for p in multi for r in p]
+    probes = [v for r in rings for v in (*r, *((r[1:] + r[:-1]) / 2.0))]
+    probes += list(np.c_[rng.uniform(cx - 0.25, cx + 0.55, 60), rng.uniform(cy - 0.25, cy + 0.25, 60)])
+    for p in probes:
+        g = ("Point", np.asarray(p, dtype=np.float64))
+        got = [f["i"] for f in ix.intersects(g)]
+        b = wkb.bounds(g)
+        cand = ix._bbox_candidates(b[0] - 1e-3, b[1] - 1e-3, b[2] + 1e-3, b[3] + 1e-3)
+        assert got == [int(i) for i in cand if predicates.intersects(ix.geoms[i], g)], p
+        for i, parts in enumerate(([holed], multi)):
+            want, dmin = _oracle_point_in_parts(p[0], p[1], parts)
+            if dmin > 1e-7 or dmin < 1e-12:
+                assert (i in got) == want, (p, i, dmin)
+
+
+@st.composite
+def _probe_layer(draw):
+    """A mixed layer (points, lines, polygons) around a centre in one of
+    the projection regimes, and probes around it."""
+    region = draw(st.sampled_from(["mid", "zone_edge", "antimeridian", "polar", "wide"]))
+    seed = draw(st.integers(0, 2**31 - 1))
+    rng = np.random.default_rng(seed)
+    cx, cy, spread = {
+        "mid": (rng.uniform(-170, 170), rng.uniform(-70, 70), 0.05),
+        "zone_edge": (6.0 * rng.integers(-29, 30), rng.uniform(-70, 70), 0.05),
+        "antimeridian": (179.98, rng.uniform(-60, 60), 0.05),
+        "polar": (rng.uniform(-170, 170), rng.choice([-1, 1]) * rng.uniform(83.5, 86.0), 0.3),
+        "wide": (rng.uniform(-150, 150), rng.uniform(-50, 50), 4.0),
+    }[region]
+    layer = []
+    for _ in range(int(rng.integers(2, 9))):
+        kind = rng.choice(["Point", "MultiPoint", "LineString", "Polygon", "GeometryCollection"])
+        c = np.c_[cx + rng.uniform(-spread, spread, 6), cy + rng.uniform(-spread, spread, 6) / 4]
+        if kind == "Point":
+            layer.append(("Point", c[0]))
+        elif kind == "MultiPoint":
+            layer.append(("MultiPoint", c[:3]))
+        elif kind == "LineString":
+            layer.append(("LineString", c[:4]))
+        elif kind == "Polygon":
+            layer.append(("Polygon", [_star(rng, c[0, 0], c[0, 1], spread / 20, spread / 5, 5)]))
+        else:
+            layer.append(("GeometryCollection", [("Point", c[0]), ("LineString", c[1:3])]))
+    probes = list(np.c_[cx + rng.uniform(-spread, spread, 4), cy + rng.uniform(-spread, spread, 4) / 4])
+    probes += [np.asarray(wkb.bounds(layer[0])[:2])]  # a vertex
+    if region == "antimeridian":  # longitudes wrapped into [-180, 180)
+        layer = [proj.transform_geom(g, lambda x, y: ((x + 180.0) % 360.0 - 180.0, y)) for g in layer]
+        probes = [np.array([(p[0] + 180.0) % 360.0 - 180.0, p[1]]) for p in probes]
+    return layer, probes, spread
+
+
+@given(_probe_layer())
+@settings(max_examples=40, deadline=None)
+def test_prepared_point_probes_match_scalar_kernels(case):
+    """within and nearest with a Point probe equal the scalar loops over
+    measure.geom_distance_m (and intersects over predicates.intersects)
+    in every projection regime: pairs projected to a UTM zone (also the
+    neighbouring one at a zone edge) take the prepared path, AEQD pairs
+    (antimeridian, polar caps, wide extents) and GeometryCollections the
+    scalar kernel; prepared distances agree to 1e-9 relative."""
+    from mundipy_spark.feature import LocalIndex
+    from tests.test_kernels import _check_probes_match_scalar
+
+    layer, probes, spread = case
+    ix = LocalIndex([(wkb.dumps(g), {"i": i}) for i, g in enumerate(layer)])
+    for p in probes:
+        g = ("Point", p)
+        d, scalar = ix._point_distances(np.arange(len(layer)), g)
+        ref = np.array([measure.geom_distance_m(h, g) for h in ix.geoms])
+        assert np.allclose(d[~scalar], ref[~scalar], rtol=1e-9, atol=0.0)
+    _check_probes_match_scalar(ix, probes, radii=(spread * 2e4, spread * 1e5))
