@@ -384,14 +384,6 @@ def _point_xy(g):
     return (d[0], d[1]) if d.shape == (2,) else None
 
 
-def _bounds(g, xy):
-    """wkb.bounds(g), without its per-array loop when xy = _point_xy(g)."""
-    if xy is None:
-        return wkb.bounds(g)
-    x, y = float(xy[0]), float(xy[1])
-    return x, y, x, y
-
-
 def _ranges(off: np.ndarray, rows: np.ndarray):
     """Flat positions of the ranges off[r]:off[r+1] for r in rows, the
     position in `rows` each comes from, and each range's start and
@@ -490,35 +482,33 @@ class _FlatLayer:
         self.eoff = np.zeros(n_rows + 1, dtype=np.int64)
         np.cumsum(np.bincount(row[src], minlength=n_rows), out=self.eoff[1:])
 
-    def probe_point(self, rows, x, y, X, Y, shift):
+    def probe_point(self, rows, x, y, X, Y):
         """Point (x, y) against the non-scalar `rows`, in the coordinate
-        system of X, Y (row r's vertex i is X[voff[r] + i + shift]):
+        system of X, Y (vx, vy or their projection, aligned with them):
         returns (hit, m) per row — hit is the boundary-inclusive
         `predicates.intersects` decision without its bbox gate, and m
         the distance `measure.geom_distance_planar` measures when they
         do not intersect, by the same formulas as the scalar kernels."""
         pts = self.kind[rows] == _POINTS
         if pts.all():
-            return self._near_points(rows, x, y, X, Y, shift)
+            return self._near_points(rows, x, y, X, Y)
         if not pts.any():
-            return self._near_edges(rows, x, y, X, Y, shift)
+            return self._near_edges(rows, x, y, X, Y)
         hit, m = np.empty(len(rows), dtype=bool), np.empty(len(rows))
         for sel, near in ((pts, self._near_points), (~pts, self._near_edges)):
-            hit[sel], m[sel] = near(rows[sel], x, y, X, Y, shift[sel])
+            hit[sel], m[sel] = near(rows[sel], x, y, X, Y)
         return hit, m
 
-    def _near_points(self, rows, x, y, X, Y, shift):
+    def _near_points(self, rows, x, y, X, Y):
         # the point-set test of predicates.intersects and distance of
         # measure.geom_distance_planar
-        v, _, start, n = _ranges(self.voff, rows)
-        v += np.repeat(shift, n)
+        v, _, start, _ = _ranges(self.voff, rows)
         m = np.sqrt(np.minimum.reduceat((X[v] - x) ** 2 + (Y[v] - y) ** 2, start))
         return m <= _ON_EPS, m
 
-    def _near_edges(self, rows, x, y, X, Y, shift):
-        e, cpos, start, n = _ranges(self.eoff, rows)
-        sh = np.repeat(shift, n)
-        a, b = self.ea[e] + sh, self.eb[e] + sh
+    def _near_edges(self, rows, x, y, X, Y):
+        e, cpos, start, _ = _ranges(self.eoff, rows)
+        a, b = self.ea[e], self.eb[e]
         xi, yi, xj, yj = X[a], Y[a], X[b], Y[b]
         # predicates.point_segs_min_dist
         dx, dy = xj - xi, yj - yi
@@ -581,7 +571,6 @@ class LocalIndex:
         )
         self._flat = _FlatLayer(self.geoms)
         self._utm: dict = {}
-        self._last_probe = (None, None)
 
     @classmethod
     def from_dataframe(cls, df, geom_col: str = "geometry"):
@@ -601,13 +590,12 @@ class LocalIndex:
 
         ix = copy.copy(self)
         ix.uscale = uscale
-        ix._utm, ix._last_probe = {}, (None, None)
         return ix
 
     def __getstate__(self):
         state = self.__dict__.copy()
         # filled per process, never shipped
-        state["_utm"], state["_last_probe"] = {}, (None, None)
+        state["_utm"] = {}
         return state
 
     def __len__(self) -> int:
@@ -644,47 +632,36 @@ class LocalIndex:
 
     def _utm_layer(self, zone: int, south: bool):
         """The layer's vertices in one UTM zone, projected on first use:
-        (rows, vertex offsets, x, y, bbox) over the rows a pair in that
-        zone can involve. A pair takes the zone of its union bbox's
-        centre and spans at most 6 deg of lon and 40 deg of lat, so its
-        row lies within 3 deg of lon of the zone and on its side of
-        20 deg beyond the equator."""
+        (x, y) aligned with vx, vy, and each row's projected bbox."""
         key = (zone, south)
         got = self._utm.get(key)
         if got is None:
             fl = self._flat
-            lo = -np.inf if zone == 1 else zone * 6.0 - 186.0
-            hi = np.inf if zone == 60 else zone * 6.0 - 180.0
-            keep = (fl.kind != _SCALAR) & (self.minx >= lo - 3.01) & (self.maxx <= hi + 3.01)
-            keep &= (self.maxy <= 20.01) if south else (self.miny >= -20.01)
-            rows = np.flatnonzero(keep)
-            v, _, start, _ = _ranges(fl.voff, rows)
-            with np.errstate(all="ignore"):
-                x, y = proj.utm_forward(fl.vx[v], fl.vy[v], zone, south)
-            bbox = np.column_stack([
-                f.reduceat(c, start) if len(rows) else np.empty(0)
-                for f, c in ((np.minimum, x), (np.minimum, y), (np.maximum, x), (np.maximum, y))
-            ])
-            got = self._utm[key] = (rows, start, x, y, bbox)
+            with np.errstate(all="ignore"):  # rows far from the zone: unused
+                x, y = proj.utm_forward(fl.vx, fl.vy, zone, south)
+            bbox = np.full((len(self.geoms), 4), np.nan)
+            has = np.diff(fl.voff) > 0
+            if has.any():
+                start = fl.voff[:-1][has]
+                bbox[has] = np.column_stack([
+                    f.reduceat(c, start)
+                    for f, c in ((np.minimum, x), (np.minimum, y), (np.maximum, x), (np.maximum, y))
+                ])
+            got = self._utm[key] = (x, y, bbox)
         return got
-
-    def _utm_probe(self, x, y, zone: int, south: bool):
-        """The probe projected like transform_geom projects a Point; the
-        last one is kept, as nearest and within often share a probe."""
-        key = (x, y, zone, south)
-        if self._last_probe[0] != key:
-            px, py = proj.utm_forward(np.asarray([x]), np.asarray([y]), zone, south)
-            self._last_probe = (key, (px[0], py[0]))
-        return self._last_probe[1]
 
     def _point_distances(self, idx: np.ndarray, g):
         """measure.geom_distance_m(self.geoms[i], g) for each i in idx,
-        g a Point, except where the returned mask is set: those pairs
-        need the scalar kernel. Per pair, the projection is the one
-        proj.local_projection picks for the pair's union bbox; a pair
-        that intersects there is at 0, else at the planar distance."""
-        x, y = _point_xy(g)
+        except where the returned mask is set: those pairs need the
+        scalar kernel (all of them unless g is a Point). Per pair, the
+        projection is the one proj.local_projection picks for the pair's
+        union bbox; a pair that intersects there is at 0, else at the
+        planar distance."""
         out = np.full(len(idx), np.nan)
+        xy = _point_xy(g)
+        if xy is None or not len(idx):
+            return out, np.ones(len(idx), dtype=bool)
+        x, y = xy
         minx, maxx = np.minimum(self.minx[idx], x), np.maximum(self.maxx[idx], x)
         miny, maxy = np.minimum(self.miny[idx], y), np.maximum(self.maxy[idx], y)
         cx, cy = (minx + maxx) / 2.0, (miny + maxy) / 2.0
@@ -696,49 +673,46 @@ class LocalIndex:
             same = key == key[0]
             grp, zone, south = todo[same], int(key[0]) // 2, bool(key[0] % 2)
             todo, key = todo[~same], key[~same]
-            rows, start, X, Y, bbox = self._utm_layer(zone, south)
+            X, Y, bbox = self._utm_layer(zone, south)
+            # the probe projected as transform_geom projects a Point
+            px, py = proj.utm_forward(np.asarray([x]), np.asarray([y]), zone, south)
+            px, py = px[0], py[0]
             r = idx[grp]
-            pos = np.minimum(np.searchsorted(rows, r), len(rows) - 1)
-            inwin = rows[pos] == r if len(rows) else np.zeros(len(r), dtype=bool)
-            if not inwin.all():  # not reached: see _utm_layer
-                scalar[grp[~inwin]] = True
-                grp, r, pos = grp[inwin], r[inwin], pos[inwin]
-            px, py = self._utm_probe(x, y, zone, south)
-            hit, m = self._flat.probe_point(r, px, py, X, Y, start[pos] - self._flat.voff[r])
+            hit, m = self._flat.probe_point(r, px, py, X, Y)
             # intersects -> 0, behind predicates.bbox_disjoint's gate
-            for j in np.flatnonzero(hit):
-                bx0, by0, bx1, by1 = bbox[pos[j]]
-                if not (bx1 < px - _ON_EPS or px < bx0 - _ON_EPS or by1 < py - _ON_EPS or py < by0 - _ON_EPS):
-                    m[j] = 0.0
+            b = bbox[r]
+            hit &= ~(
+                (b[:, 2] < px - _ON_EPS) | (px < b[:, 0] - _ON_EPS)
+                | (b[:, 3] < py - _ON_EPS) | (py < b[:, 1] - _ON_EPS)
+            )
+            m[hit] = 0.0
             out[grp] = m
         return out, scalar
 
     def intersects(self, probe) -> list[Feature]:
         g = _as_geom(probe)
-        xy = _point_xy(g)
-        minx, miny, maxx, maxy = _bounds(g, xy)
+        minx, miny, maxx, maxy = wkb.bounds(g)
         if g[0] == "Point":  # degenerate-bbox epsilon (dataset.py:159)
             minx, miny, maxx, maxy = minx - 1e-3, miny - 1e-3, maxx + 1e-3, maxy + 1e-3
         idx = self._bbox_candidates(minx, miny, maxx, maxy)
-        if xy is None:
-            return self._features(i for i in idx if predicates.intersects(self.geoms[i], g))
-        x, y = xy
-        # predicates.bbox_disjoint, then the prepared decision
-        idx = idx[
-            ~(
+        hit = np.zeros(len(idx), dtype=bool)
+        scalar = np.ones(len(idx), dtype=bool)  # pairs for predicates.intersects
+        xy = _point_xy(g)
+        if xy is not None:
+            x, y = xy
+            fl = self._flat
+            # predicates.bbox_disjoint's gate, then the prepared decision
+            near = ~(
                 (self.maxx[idx] < x - _ON_EPS) | (x < self.minx[idx] - _ON_EPS)
                 | (self.maxy[idx] < y - _ON_EPS) | (y < self.miny[idx] - _ON_EPS)
             )
-        ]
-        fl = self._flat
-        scalar = fl.kind[idx] == _SCALAR
-        keep = np.zeros(len(idx), dtype=bool)
-        prep = np.flatnonzero(~scalar)
-        if len(prep):
-            keep[prep], _ = fl.probe_point(idx[prep], x, y, fl.vx, fl.vy, np.zeros(len(prep), dtype=np.int64))
+            scalar = near & (fl.kind[idx] == _SCALAR)
+            prep = np.flatnonzero(near & ~scalar)
+            if len(prep):
+                hit[prep], _ = fl.probe_point(idx[prep], x, y, fl.vx, fl.vy)
         for j in np.flatnonzero(scalar):
-            keep[j] = predicates.intersects(self.geoms[idx[j]], g)
-        return self._features(idx[keep])
+            hit[j] = predicates.intersects(self.geoms[idx[j]], g)
+        return self._features(idx[hit])
 
     def within(self, radius: float, probe) -> list[Feature]:
         """radius is in SESSION units (feet under Mundi(units='feet')) —
@@ -759,8 +733,7 @@ class LocalIndex:
         # 111.32*cos(lat) km, so the lon pad must scale by 1/cos at the
         # highest |lat| the radius can reach — a flat 1.5x fudge
         # undercovers above ~48 deg and silently drops true matches.
-        xy = _point_xy(g)
-        minx, miny, maxx, maxy = _bounds(g, xy)
+        minx, miny, maxx, maxy = wkb.bounds(g)
         pad_lat = radius_m / 110_000.0 + 1e-9
         lat_hi = min(max(abs(miny), abs(maxy)) + pad_lat, 89.9)
         coslat = max(np.cos(np.radians(lat_hi)), 1e-6)
@@ -768,10 +741,6 @@ class LocalIndex:
         idx = self._bbox_candidates(
             minx - pad_lon, miny - pad_lat, maxx + pad_lon, maxy + pad_lat
         )
-        if xy is None or not len(idx):
-            return self._features(
-                i for i in idx if measure.geom_distance_m(self.geoms[i], g) <= radius_m
-            )
         d, scalar = self._point_distances(idx, g)
         for j in np.flatnonzero(scalar):
             d[j] = measure.geom_distance_m(self.geoms[idx[j]], g)
@@ -783,8 +752,7 @@ class LocalIndex:
             return None
         # best-first candidate scan over a TRUE meter lower bound, exact
         # refine. Bbox-to-bbox gaps in degrees:
-        xy = _point_xy(g)
-        pminx, pminy, pmaxx, pmaxy = _bounds(g, xy)
+        pminx, pminy, pmaxx, pmaxy = wkb.bounds(g)
         dx = np.maximum(np.maximum(self.minx - pmaxx, pminx - self.maxx), 0.0)
         # antimeridian wrap: the gap the other way around is 360 minus
         # the hull span of the two lon intervals
@@ -803,35 +771,27 @@ class LocalIndex:
         coslat = np.cos(np.radians(np.minimum(lat_hi, 89.99)))
         lb_m = np.maximum(dy * 110_000.0, dx * 70_000.0 * coslat)
         order = np.argsort(lb_m)
+        # scanned in lower-bound order until the bound passes the best
+        # distance, measured in blocks: the first 8 candidates, then all
+        # whose bound is within the best distance so far; scalar-kernel
+        # pairs are measured only when the scan reaches them
+        lb_sorted = lb_m[order]
         best, best_d = None, np.inf
-        if xy is None:
-            for i in order:
+        pos, n = 0, len(order)
+        while pos < n and not lb_sorted[pos] > best_d:
+            end = pos + 8 if best_d == np.inf else pos + max(
+                1, int(np.searchsorted(lb_sorted[pos:], best_d, side="right"))
+            )
+            block = order[pos:end]
+            ds, scalar = self._point_distances(block, g)
+            for i, d, sc in zip(block.tolist(), ds.tolist(), scalar.tolist()):
                 if lb_m[i] > best_d:
+                    pos = n
                     break
-                d = measure.geom_distance_m(self.geoms[int(i)], g)
+                if sc:
+                    d = measure.geom_distance_m(self.geoms[i], g)
                 if d < best_d:
-                    best, best_d = int(i), d
-        else:
-            # the same scan, measured in blocks: the first 8 candidates,
-            # then all whose bound is within the best distance so far;
-            # scalar-kernel pairs are measured only when the scan
-            # reaches them
-            lb_sorted = lb_m[order]
-            pos, n = 0, len(order)
-            while pos < n and not lb_sorted[pos] > best_d:
-                end = pos + 8 if best_d == np.inf else pos + max(
-                    1, int(np.searchsorted(lb_sorted[pos:], best_d, side="right"))
-                )
-                block = order[pos:end]
-                ds, scalar = self._point_distances(block, g)
-                for i, d, sc in zip(block.tolist(), ds.tolist(), scalar.tolist()):
-                    if lb_m[i] > best_d:
-                        pos = n
-                        break
-                    if sc:
-                        d = measure.geom_distance_m(self.geoms[i], g)
-                    if d < best_d:
-                        best, best_d = i, d
-                else:
-                    pos = end
+                    best, best_d = i, d
+            else:
+                pos = end
         return Feature(self.geoms[best], self.props[best], self.uscale) if best is not None else None

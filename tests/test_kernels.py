@@ -901,6 +901,26 @@ def test_local_index_point_distance_routes():
     _check_probes_match_scalar(ix, probes, radii=(1e3, 1e6))
 
 
+def test_local_index_non_point_probes_take_scalar_kernels():
+    """Line and polygon probes run the same scans with every pair sent
+    to the scalar kernels, and give the per-candidate loops' answers."""
+    ix = _edge_case_index()
+    probes = [
+        ("LineString", np.array([[10.05, 50.05], [10.32, 50.22]])),
+        ("Polygon", [_square(10.38, 49.98, 0.1)]),
+        ("LineString", np.array([[11.0, 51.0], [11.2, 51.1]])),  # away from the layer
+    ]
+    for g in probes:
+        d, scalar = ix._point_distances(np.arange(len(ix)), g)
+        assert scalar.all() and np.isnan(d).all()
+        for r in (0.0, 50.0, 5e3):
+            inter, within, best = scalar_local_index_probes(ix, g, r)
+            assert [f["i"] for f in ix.intersects(g)] == inter
+            assert [f["i"] for f in ix.within(r, g)] == within, r
+            assert ix.nearest(g)["i"] == best
+    assert not ix._utm
+
+
 def test_local_index_nearest_equidistant_tie_keeps_scalar_winner():
     """Equidistant candidates (copies of the nearest stop among others):
     nearest returns the one the scalar scan returns, the first in
